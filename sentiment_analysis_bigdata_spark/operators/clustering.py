@@ -27,21 +27,20 @@ Determinism contract (what makes the oracle exact):
 - An empty cluster keeps its previous centroid (documented, replayed
   identically by the oracle via COALESCE).
 
-Scale shape (100 TB): each iteration is ONE shuffle — ``posexplode``
-then a partial+final hash agg keyed (cluster_id, dim) with k×d output
-rows. The centroid model reaches the executors one of two ways,
-selected by ``assign_method``:
+Scale shape (100 TB): ONE Lloyd loop (:func:`_lloyd_centers`) serves
+every path. Each round is one assign pass plus ONE shuffle —
+``posexplode`` then a partial+final hash agg keyed (cluster_id, dim)
+with k×d output rows, collected to the driver as the next centroids.
+Only the assign step varies, selected by ``assign_method``:
 
 - ``literal`` (default for k ≤ 256): the k×d centroids are codegen'd
   literals — zero join, but plan size and py4j/parse cost grow with k.
 - ``broadcast`` (default for k > 256, the real-SemDeDup shape — Abbas
-  et al. use k=50,000 for LAION): centroids stay a DataFrame end to
-  end (seeds, re-estimation, empty-cluster carry-over are all frame
-  ops — NO driver collect at any point) and ship to executors as ONE
-  broadcast row holding ``array<struct<cid,c>>``; the assign is a
-  ``transform`` over that array with the SAME sequential
+  et al. use k=50,000 for LAION): the centroid list ships to executors
+  as ONE broadcast row holding ``array<struct<cid,c>>``; the assign is
+  a ``transform`` over that array with the SAME sequential
   zip_with/aggregate arithmetic, so assignments are bit-identical to
-  the literal path (pytest-proven at k=512).
+  the literal path (pytest-proven at k=512) with plan size O(1) in k.
 - ``gemm`` (opt-in, the large-k WALL-TIME path): the assign is an
   Arrow ``mapInPandas`` kernel computing all n×k distances as one BLAS
   matmul per batch via ``d² = |x|² + |c|² − 2x·c`` — the FAISS assign
@@ -56,27 +55,30 @@ selected by ``assign_method``:
   Assignments are pytest-proven identical to the broadcast path on
   quantized inputs.
 
-Driver traffic per iteration is k×d doubles (literal and gemm — the
-gemm kernel closes over the centroid matrix, model-sized like a
-persisted ANN codebook) or zero (broadcast — the broadcast itself is
-executor-side). No global sort, no cartesian.
+Driver traffic per round is k×d doubles on every path: the collected
+means come in and go back out as literals, as the broadcast row, or
+inside the gemm kernel — model-sized, like a persisted ANN codebook
+(50k×64 ≈ 26 MB at the SemDeDup-at-LAION shape). No global sort, no
+cartesian.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from sentiment_analysis_bigdata_spark.plans.barrier import barrier_eager
 
 # Above this k the assign step switches from k inline literal folds to a
-# broadcast centroid frame: plan size/parse time grow with k on the
+# broadcast centroid row: plan size/parse time grow with k on the
 # literal path while the broadcast path is O(1) in plan size.
 BROADCAST_ASSIGN_THRESHOLD = 256
 
 
 def _sqdist_sql(vec_col: str, center: list[float]) -> str:
-    """Sequential left-to-right sum of squared per-dim diffs (matches
-    DuckDB ``list_sum`` order for bit-stable cross-engine replay).
+    """Sequential left-to-right sum of squared per-dim diffs over an
+    ``array<double>`` column (matches DuckDB ``list_sum`` order for
+    bit-stable cross-engine replay).
 
     Emitted as SQL TEXT, not Column-API calls: k centroids × (zip_with +
     aggregate + 2 lambdas) through py4j cost ~1.7 s of driver time PER
@@ -86,33 +88,29 @@ def _sqdist_sql(vec_col: str, center: list[float]) -> str:
     round-trips exactly."""
     arr = "array(" + ", ".join(f"{float(x)!r}D" for x in center) + ")"
     return (
-        f"aggregate(zip_with(CAST({vec_col} AS array<double>), {arr}, "
+        f"aggregate(zip_with({vec_col}, {arr}, "
         f"(x, c) -> (x - c) * (x - c)), 0.0D, (acc, x) -> acc + x)"
     )
 
 
-def _assign(df: DataFrame, vec_col: str, centers: list[list[float]]) -> DataFrame:
+def _assign(base: DataFrame, centers: list[list[float]]) -> DataFrame:
     """Add ``cluster_id`` (argmin of squared L2; ties → lowest cid via
-    lexicographic struct array_min) and ``dist2`` columns. Centroids are
-    inline literals; the struct is selected once and fields projected in
-    a second step (a top-level alias is not re-inlined, so the k folds
-    run once per row)."""
-    # same cast hoist as _assign_broadcast: HOF lambdas evaluate
-    # interpreted (no CSE), so the per-centroid CAST would re-run k times
-    # per row; casting once in a preceding projection is value-identical
+    lexicographic struct array_min) and ``dist2`` columns to the
+    ``(_id, _v)`` frame. Centroids are inline literals; the struct is
+    selected once and fields projected in a second step (a top-level
+    alias is not re-inlined, so the k folds run once per row)."""
     cands = ", ".join(
-        f"struct({_sqdist_sql('_vd', ctr)} AS d, {i} AS cid)"
+        f"struct({_sqdist_sql('_v', ctr)} AS d, {i} AS cid)"
         for i, ctr in enumerate(centers)
     )
     return (
-        df.selectExpr("*", f"CAST({vec_col} AS array<double>) AS _vd")
-        .selectExpr("*", f"array_min(array({cands})) AS _best")
+        base.selectExpr("*", f"array_min(array({cands})) AS _best")
         .selectExpr("*", "_best.cid AS cluster_id", "_best.d AS dist2")
-        .drop("_best", "_vd")
+        .drop("_best")
     )
 
 
-def _assign_broadcast(df: DataFrame, vec_col: str, cents: DataFrame) -> DataFrame:
+def _assign_broadcast(base: DataFrame, centers: list[list[float]]) -> DataFrame:
     """Same argmin contract as :func:`_assign` (sequential squared-L2,
     ties → lowest cid) but the centroids ride as ONE broadcast row
     holding ``array<struct<cid int, c array<double>>>`` instead of k
@@ -121,28 +119,26 @@ def _assign_broadcast(df: DataFrame, vec_col: str, cents: DataFrame) -> DataFram
     zip_with/aggregate fold, so assignments are bit-identical to the
     literal path."""
     one = (
-        cents.select(F.struct(F.col("cid"), F.col("c")).alias("s"))
+        base.sparkSession.createDataFrame(
+            list(enumerate(centers)), "cid int, c array<double>"
+        )
+        .select(F.struct(F.col("cid"), F.col("c")).alias("s"))
         .groupBy()
         .agg(F.array_sort(F.collect_list("s")).alias("_cents"))
     )
-    # hoist the float→double cast out of the per-centroid lambda:
-    # interpreted eval has no CSE, so an inline cast re-runs once per
-    # centroid per row (k× the work; hoisting is value-identical — the
-    # cast is exact)
     sq = (
-        "aggregate(zip_with(_vd, s.c, "
+        "aggregate(zip_with(_v, s.c, "
         "(x, c) -> (x - c) * (x - c)), 0.0D, (acc, x) -> acc + x)"
     )
     return (
-        df.selectExpr("*", f"CAST({vec_col} AS array<double>) AS _vd")
-        .crossJoin(F.broadcast(one))
+        base.crossJoin(F.broadcast(one))
         .selectExpr(
             "*",
             f"array_min(transform(_cents, s -> struct({sq} AS d, s.cid AS cid)))"
             " AS _best",
         )
         .selectExpr("*", "_best.cid AS cluster_id", "_best.d AS dist2")
-        .drop("_best", "_cents", "_vd")
+        .drop("_best", "_cents")
     )
 
 
@@ -161,9 +157,7 @@ def quantize_grid(vec: Column, grid_bits: int = 16) -> Column:
     )
 
 
-def _assign_gemm(
-    df: DataFrame, vec_col: str, centers: list[list[float]]
-) -> DataFrame:
+def _assign_gemm(base: DataFrame, centers: list[list[float]]) -> DataFrame:
     """Same argmin contract as :func:`_assign` (ties → lowest cid; on
     grid-quantized inputs bit-identical distances) but all n×k distances
     per Arrow batch come from ONE BLAS matmul:
@@ -181,7 +175,7 @@ def _assign_gemm(
     cc = (cm * cm).sum(axis=1)  # exact on the grid
 
     fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+        f"`{f.name}` {f.dataType.simpleString()}" for f in base.schema.fields
     )
     schema = f"{fields}, `cluster_id` int, `dist2` double"
 
@@ -189,7 +183,7 @@ def _assign_gemm(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+            x = np.stack(pdf["_v"].to_numpy()).astype("float64")
             xx = (x * x).sum(axis=1)
             d2 = xx[:, None] + cc[None, :] - 2.0 * (x @ cm.T)
             cid = d2.argmin(axis=1)
@@ -198,29 +192,37 @@ def _assign_gemm(
             out["dist2"] = d2[np.arange(len(cid)), cid]
             yield out
 
-    return df.mapInPandas(kernel, schema=schema)
+    return base.mapInPandas(kernel, schema=schema)
 
 
-def _kmeans_lloyd_gemm(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
+_ASSIGN = {
+    "literal": _assign,
+    "broadcast": _assign_broadcast,
+    "gemm": _assign_gemm,
+}
+
+
+def _lloyd_base(df: DataFrame, id_col: str, vec: Column) -> DataFrame:
+    """The ``(_id, _v)`` frame every Lloyd step reads. ``_v`` is projected
+    ONCE here: HOF lambdas evaluate interpreted (no CSE), so a cast
+    inside the per-centroid fold would re-run k times per row."""
+    return df.select(F.col(id_col).alias("_id"), vec.alias("_v"))
+
+
+def _lloyd_centers(
+    base: DataFrame,
     k: int,
     iterations: int,
-    grid_bits: int,
+    assign: Callable[[DataFrame, list[list[float]]], DataFrame],
+    mean: Column,
     strict: bool,
-) -> DataFrame:
-    """Lloyd loop on GRID-QUANTIZED vectors with the BLAS assign: seeds
-    and re-estimated means are floored onto the same lattice
-    (``floor(avg·2^b)/2^b`` — the per-(cluster,dim) sums are exact on
-    the lattice, so the avg is bit-identical across engines and
-    partial-agg orders), and each round collects the k×d centroid matrix
-    to feed the kernel — model-sized driver traffic, same as the literal
-    path, with O(1) plan size in k."""
-    scale = float(1 << grid_bits)
-    base = df.select(
-        F.col(id_col).alias("_id"), quantize_grid(F.col(vec_col), grid_bits).alias("_v")
-    )
+) -> list[list[float]]:
+    """The Lloyd loop shared by every assign path: seeds are the ``_v``
+    of the ``k`` smallest ``_id`` (cid = seed rank), each round runs
+    ``assign`` and re-estimates every (cluster, dim) with ``mean`` over
+    the exploded ``val`` column, and an empty cluster keeps its previous
+    centroid. Returns the final centroids as a Python list — k×d doubles
+    of driver traffic per round."""
     seeds = base.orderBy("_id").limit(k).select("_v").collect()
     if not seeds:
         raise ValueError("kmeans_lloyd: input frame is empty (need >= 1 row)")
@@ -233,13 +235,11 @@ def _kmeans_lloyd_gemm(
     dim = len(centers[0])
 
     for _ in range(iterations):
-        assigned = _assign_gemm(base, "_v", centers)
         rows = (
-            assigned.select(
-                "cluster_id", F.posexplode("_v").alias("dim", "val")
-            )
+            assign(base, centers)
+            .select("cluster_id", F.posexplode("_v").alias("dim", "val"))
             .groupBy("cluster_id", "dim")
-            .agg((F.floor(F.avg("val") * scale) / scale).alias("m"))
+            .agg(mean.alias("m"))
             .collect()
         )
         new_centers = [list(c) for c in centers]  # empty cluster keeps old
@@ -249,74 +249,7 @@ def _kmeans_lloyd_gemm(
         for cid, dims in by_cid.items():
             new_centers[cid] = [dims[i] for i in range(dim)]
         centers = new_centers
-    return _assign_gemm(base, "_v", centers).select(
-        F.col("_id").alias(id_col), "cluster_id", "dist2"
-    )
-
-
-def _kmeans_lloyd_broadcast(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int,
-    iterations: int,
-    round_digits: int,
-    strict: bool,
-) -> DataFrame:
-    """Frame-only Lloyd loop: seeds, assignment, re-estimation and the
-    empty-cluster carry-over are all DataFrame ops — the centroids never
-    visit the driver. ``localCheckpoint`` after each round keeps the
-    lineage flat (k×d rows materialized, the same cost a production run
-    pays writing the model to a table)."""
-    from pyspark.sql import Window
-
-    cents = (
-        df.orderBy(id_col)
-        .limit(k)
-        .select(
-            F.col(id_col).alias("_sid"),
-            F.col(vec_col).cast("array<double>").alias("c"),
-        )
-        .withColumn("cid", F.row_number().over(Window.orderBy("_sid")) - 1)
-        .select("cid", "c")
-        .transform(barrier_eager)
-    )
-    n_seeds = cents.count()
-    if n_seeds == 0:
-        raise ValueError("kmeans_lloyd: input frame is empty (need >= 1 row)")
-    if strict and n_seeds < k:
-        raise ValueError(
-            f"kmeans_lloyd: k={k} exceeds row count {n_seeds}; pass "
-            "strict=False to run with one cluster per row instead"
-        )
-    for _ in range(iterations):
-        assigned = _assign_broadcast(df, vec_col, cents)
-        means = (
-            assigned.select(
-                "cluster_id",
-                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-                    "dim", "val"
-                ),
-            )
-            .groupBy("cluster_id", "dim")
-            .agg(F.round(F.avg("val"), round_digits).alias("m"))
-        )
-        newc = (
-            means.groupBy("cluster_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select(
-                F.col("cluster_id").alias("cid"),
-                F.expr("transform(dm, x -> x.m)").alias("c_new"),
-            )
-        )
-        cents = (
-            cents.join(newc, "cid", "left")
-            .select("cid", F.coalesce("c_new", "c").alias("c"))
-            .transform(barrier_eager)
-        )
-    return _assign_broadcast(df, vec_col, cents).select(
-        F.col(id_col), "cluster_id", "dist2"
-    )
+    return centers
 
 
 def kmeans_lloyd(
@@ -334,91 +267,42 @@ def kmeans_lloyd(
     return the final assignment frame: ``(id_col, cluster_id, dist2)``.
 
     ``iterations`` counts re-estimation rounds; the returned assignment
-    uses the centroids produced by the last round.
+    uses the centroids produced by the last round. Every path runs the
+    same loop (:func:`_lloyd_centers`) with the centroids on the driver;
+    only the assign step differs.
 
     ``assign_method``: ``"literal"`` inlines centroids as codegen
-    literals (driver round-trip per round), ``"broadcast"`` keeps them
-    in a broadcast frame (no driver collect; required for large k),
-    ``"auto"`` picks by ``k > BROADCAST_ASSIGN_THRESHOLD``; both produce
-    bit-identical assignments. ``"gemm"`` (opt-in) is the large-k
-    wall-time path: BLAS assign over GRID-QUANTIZED vectors
-    (``grid_bits``; see :func:`quantize_grid`) — identical to the other
-    paths when the input is already on the lattice. ``strict=False``
-    permits k > row-count (runs with one seed per row — the SQL
-    ``LIMIT k`` semantics); an empty input always raises.
+    literals, ``"broadcast"`` ships them as one broadcast row (plan size
+    O(1) in k; required for large k), ``"auto"`` picks by
+    ``k > BROADCAST_ASSIGN_THRESHOLD``; both produce bit-identical
+    assignments. ``"gemm"`` (opt-in) is the large-k wall-time path: BLAS
+    assign over GRID-QUANTIZED vectors, with means floored onto the same
+    grid (``grid_bits``; see :func:`quantize_grid`) — identical to the
+    other paths' assign when the input is already on the lattice.
+    ``strict=False`` permits k > row-count (runs with one seed per row —
+    the SQL ``LIMIT k`` semantics); an empty input always raises.
     """
-    if assign_method not in ("auto", "literal", "broadcast", "gemm"):
+    if assign_method not in ("auto", *_ASSIGN):
         raise ValueError(f"unknown assign_method {assign_method!r}")
     if assign_method == "auto":
         assign_method = (
             "broadcast" if k > BROADCAST_ASSIGN_THRESHOLD else "literal"
         )
     if assign_method == "gemm":
-        return _kmeans_lloyd_gemm(
-            df, vec_col, id_col, k, iterations, grid_bits, strict
-        )
-    if assign_method == "broadcast":
-        return _kmeans_lloyd_broadcast(
-            df, vec_col, id_col, k, iterations, round_digits, strict
-        )
-    centers = _lloyd_centers_literal(
-        df, vec_col, id_col, k, iterations, round_digits, strict
+        scale = float(1 << grid_bits)
+        vec = quantize_grid(F.col(vec_col), grid_bits)
+        # per-(cluster, dim) sums are exact on the lattice, so the floored
+        # avg is bit-identical across engines and partial-agg orders
+        mean = F.floor(F.avg("val") * scale) / scale
+    else:
+        vec = F.col(vec_col).cast("array<double>")
+        mean = F.round(F.avg("val"), round_digits)
+    assign = _ASSIGN[assign_method]
+    base = _lloyd_base(df, id_col, vec)
+    centers = _lloyd_centers(base, k, iterations, assign, mean, strict)
+    return assign(base, centers).select(
+        F.col("_id").alias(id_col), "cluster_id", "dist2"
     )
-    return _assign(df, vec_col, centers).select(
-        F.col(id_col), "cluster_id", "dist2"
-    )
-
-
-def _lloyd_centers_literal(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int,
-    iterations: int,
-    round_digits: int,
-    strict: bool,
-) -> list[list[float]]:
-    """The literal-path Lloyd loop: returns the final centroids as a
-    Python list (k×d doubles of driver traffic per round — the
-    documented literal-path ceiling). Shared by :func:`kmeans_lloyd` and
-    :func:`kmeans_silhouette`."""
-    seeds = (
-        df.orderBy(id_col)
-        .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    if not seeds:
-        raise ValueError("kmeans_lloyd: input frame is empty (need >= 1 row)")
-    if strict and len(seeds) < k:
-        raise ValueError(
-            f"kmeans_lloyd: k={k} exceeds row count {len(seeds)}; pass "
-            "strict=False to run with one cluster per row instead"
-        )
-    centers: list[list[float]] = [list(r["v"]) for r in seeds]
-    dim = len(centers[0])
-
-    for _ in range(iterations):
-        assigned = _assign(df, vec_col, centers)
-        rows = (
-            assigned.select(
-                "cluster_id",
-                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-                    "dim", "val"
-                ),
-            )
-            .groupBy("cluster_id", "dim")
-            .agg(F.round(F.avg("val"), round_digits).alias("m"))
-            .collect()
-        )
-        new_centers = [list(c) for c in centers]  # empty cluster keeps old
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cid.setdefault(r["cluster_id"], {})[r["dim"]] = r["m"]
-        for cid, dims in by_cid.items():
-            new_centers[cid] = [dims[i] for i in range(dim)]
-        centers = new_centers
-    return centers
 
 
 def kmeans_silhouette(
@@ -447,16 +331,16 @@ def kmeans_silhouette(
     """
     if k < 2:
         raise ValueError("kmeans_silhouette: k must be >= 2")
-    centers = _lloyd_centers_literal(
-        df, vec_col, id_col, k, iterations, round_digits, strict
+    base = _lloyd_base(df, id_col, F.col(vec_col).cast("array<double>"))
+    centers = _lloyd_centers(
+        base, k, iterations, _assign, F.round(F.avg("val"), round_digits), strict
     )
     cands = ", ".join(
-        f"struct({_sqdist_sql('_vd', ctr)} AS d, {i} AS cid)"
+        f"struct({_sqdist_sql('_v', ctr)} AS d, {i} AS cid)"
         for i, ctr in enumerate(centers)
     )
     scored = (
-        df.selectExpr("*", f"CAST({vec_col} AS array<double>) AS _vd")
-        .selectExpr("*", f"array({cands}) AS _cands")
+        base.selectExpr("*", f"array({cands}) AS _cands")
         .selectExpr("*", "array_min(_cands) AS _best")
         .selectExpr(
             "*",
@@ -777,6 +661,11 @@ def knn_graph(
     1/128 — so rounding must stay in the JVM). Recall vs exact kNN is a
     measurable trade (raise k and probe adjacent clusters to improve
     it — see ``similarity.ivf_topk`` for the multi-probe variant).
+
+    Embeddings must be finite: the kernel's ``np.argsort`` ranks a NaN
+    cosine LAST, where a Spark window over the same cosines would rank
+    it first (Spark orders NaN above every double), so a NaN component
+    changes which neighbors survive the cut.
     """
     assigned = kmeans_lloyd(
         emb, vec_col, id_col, k=k, iterations=iterations,

@@ -514,11 +514,12 @@ def sssp_weighted(
     superset of what the per-round delta form would extend, and any
     inflated intermediate candidate is absorbed by the min-merge (every
     candidate is a real ≤k-edge path weight; min over a superset of the
-    same path set is identical — fuzz-pinned old-vs-new in
-    tests/test_graph_ops.py and replayed exactly by the ≤rounds-edge
-    oracle CTE). Work per relaxation stays proportional to the changed
-    set; an empty improved frontier stops early. The symmetrized edge
-    frame collapses parallel edges to their min weight once, up front.
+    same path set is identical — fuzz-pinned in tests/test_iterative.py
+    (``TestSsspWeighted.test_fuzz_matches_reference_closure``) and
+    replayed exactly by the ≤rounds-edge oracle CTE). Work per
+    relaxation stays proportional to the changed set; an empty improved
+    frontier stops early. The symmetrized edge frame collapses parallel
+    edges to their min weight once, up front.
     """
     fwd = edges.select(
         F.col(a_col).alias("s"), F.col(b_col).alias("d"), F.col(w_col).alias("w")

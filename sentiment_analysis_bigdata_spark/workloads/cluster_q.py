@@ -343,12 +343,13 @@ BCAST_K = 64  # exercises the broadcast-frame assign explicitly (auto
 
 def q_kmeans_broadcast(spark: SparkSession, sf: str) -> DataFrame:
     """Same Lloyd recursion as ``kmeans_clusters`` but k=64 and the
-    BROADCAST-frame assign path (operators/clustering.py
-    _kmeans_lloyd_broadcast): centroids never visit the driver — seeds,
-    re-estimation, and empty-cluster carry-over are all frame ops, and
-    the model ships as one broadcast array row. This is the large-k
-    SemDeDup shape (Abbas et al. use k=50k); the oracle replays the
-    identical recursion, proving the frame-only path is value-exact.
+    BROADCAST assign step (operators/clustering.py ``_assign_broadcast``):
+    the one Lloyd loop every path shares collects the k×d means to the
+    driver each round, and the centroids ship to executors as one
+    broadcast array row instead of k inline literal folds (plan size
+    O(1) in k). This is the large-k SemDeDup shape (Abbas et al. use
+    k=50k); the oracle replays the identical recursion, proving the
+    broadcast assign is value-exact.
 
     The scan is wrapped in ``ensure_min_parallelism`` (the posture
     ``semdedup_512`` already takes on the same table): the embeddings

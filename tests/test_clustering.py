@@ -167,11 +167,12 @@ def test_gemm_jobs_per_round_bounded_k4096(spark):
 
 
 def test_broadcast_jobs_per_round_bounded_k4096(spark):
-    """VERDICT r5 #6, broadcast-path side: the frame-only Lloyd loop's
-    Spark job count is O(1) in k — the localCheckpoint barriers and the
-    seed count are per-ROUND costs, not per-centroid. Measured via job
-    groups at k=512 and k=4096 on the same frame; counts must be equal
-    and small."""
+    """VERDICT r5 #6, broadcast-path side: the Lloyd loop's Spark job
+    count is O(1) in k — the seed collect and the per-round means collect
+    are per-ROUND costs, not per-centroid. Measured via job groups at
+    k=512 and k=4096 on the same frame; counts must be equal and small
+    (9 measured, plus the gemm test's slack of 1 — a per-round barrier
+    would exceed it)."""
     import math
 
     rows = [(i, [math.sin(0.3 * i), math.cos(0.2 * i)]) for i in range(4200)]
@@ -193,14 +194,14 @@ def test_broadcast_jobs_per_round_bounded_k4096(spark):
     j4096 = run(4096)
     j512 = run(512)
     assert j4096 == j512
-    assert j4096 <= 16, j4096
+    assert j4096 <= 10, j4096
 
 
 def test_empty_and_overk_guards(spark):
     import pytest
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    for method in ("literal", "broadcast"):
+    for method in ("literal", "broadcast", "gemm"):
         with pytest.raises(ValueError, match="empty"):
             kmeans_lloyd(empty, "embedding", "vec_id", k=2,
                          assign_method=method)
@@ -208,7 +209,7 @@ def test_empty_and_overk_guards(spark):
         [(0, [1.0, 2.0]), (1, [3.0, 4.0])],
         "vec_id long, embedding array<double>",
     )
-    for method in ("literal", "broadcast"):
+    for method in ("literal", "broadcast", "gemm"):
         with pytest.raises(ValueError, match="exceeds row count"):
             kmeans_lloyd(small, "embedding", "vec_id", k=5,
                          assign_method=method)

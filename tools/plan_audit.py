@@ -256,7 +256,7 @@ AUDIT = {
     ),
     "kmeans_clusters": (
         ["HashAggregate"],
-        "per-cluster report is a partial+final agg over the checkpointed "
+        "per-cluster report is a partial+final agg over the final "
         "assignment; each Lloyd round behind it is ONE posexplode "
         "(cluster, dim) agg with k×d output rows",
     ),
@@ -387,11 +387,11 @@ AUDIT = {
     "kmeans_broadcast": (
         ["HashAggregate", "BroadcastNestedLoopJoin", "ObjectHashAggregate",
          "!CartesianProduct", "!SortMergeJoin", "!Window"],
-        "large-k Lloyd, broadcast-frame assign: centroids ride as ONE "
-        "broadcast array row (the BroadcastNestedLoopJoin is that 1-row "
-        "crossJoin — plan size O(1) in k); per-round lineage is cut by "
-        "localCheckpoint, so the audited final plan is one assign pass "
-        "plus the k-row summary agg",
+        "large-k Lloyd, broadcast assign: the driver-side centroid list "
+        "rides as ONE broadcast array row (the BroadcastNestedLoopJoin is "
+        "that 1-row crossJoin — plan size O(1) in k); every Lloyd round "
+        "ends in an eager k×d means collect, so the audited final plan "
+        "is one assign pass plus the k-row summary agg",
     ),
     "dsir_sample": (
         ["HashAggregate", "TakeOrderedAndProject", "!CartesianProduct",
@@ -449,12 +449,12 @@ AUDIT = {
         ["HashAggregate", "SortMergeJoin|BroadcastHashJoin",
          "!CartesianProduct", "!Window"],
         "SemDeDup at k=4096 on the BLAS assign path: centroid argmin is "
-        "ONE Arrow kernel per batch (MapInPandas — upstream of the "
-        "audited plan because semdedup localCheckpoints the assigned "
-        "frame, same lineage cut as kmeans_broadcast) with plan size and "
-        "jobs O(1) in k, the k×d matrix model-sized in the kernel; the "
-        "pair scan is the r13 per-block Arrow kernel keyed on cluster_id "
-        "(blocks bound pair work to n²/k), never a cartesian",
+        "ONE Arrow kernel per batch (the lower MapInPandas, over the "
+        "query's once-barriered tiled corpus) with plan size and jobs "
+        "O(1) in k, the k×d matrix model-sized in the kernel; the pair "
+        "scan is the r13 per-block Arrow kernel (the upper MapInPandas) "
+        "keyed on cluster_id (blocks bound pair work to n²/k), never a "
+        "cartesian",
     ),
     "gopher_quality_gate": (
         ["HashAggregate", "!CartesianProduct", "!Window", "!SortMergeJoin",
