@@ -14,7 +14,6 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -304,59 +303,6 @@ def main() -> None:
     # distinguishable from a real plan regression.
     load_start = os.getloadavg()[0]
 
-    import __spark_entry__ as entrymod
-    from sentiment_analysis_bigdata_spark import get_spark
-
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-
-    # warmup: touch every table's footer and prime the codegen/HOF machinery
-    # so JVM startup isn't billed to whichever query happens to run first
-    # (a plain hand-written-PySpark baseline run would be warmed identically)
-    from pyspark.sql import functions as F
-
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).count()
-    spark.range(10).select(
-        F.aggregate(F.array(F.col("id")), F.lit(0).cast("bigint"), lambda a, b: a + b)
-    ).count()
-
-    # r13 warmup-completeness fix (same contract as the JVM warmup above:
-    # machinery startup must not be billed to whichever query runs first).
-    # The Python/Arrow worker pool was the one piece of fixed machinery the
-    # warmup did not cover: the FIRST Arrow-kernel query in headline order
-    # (minhash_signatures) paid ~2 s of one-off worker spawn + pandas/numpy
-    # import per worker (isolated decomposition: a trivial mapInPandas
-    # costs 3.1 s on a cold pool and minhash's first run drops 3.2 → 1.4 s
-    # once the pool exists; the surrounding pure-JVM queries are
-    # unaffected). One worker per core is primed, scale-adaptively.
-    # Methodology change recorded in OPTIMIZATION_r13.md; the committed
-    # idle-host snapshot under the OLD warmup is bench_results/r13_rerun.json.
-    def _prime_arrow_pool(batches):
-        import numpy as np  # noqa: F401 — the import cost is the point
-        import pandas as pd  # noqa: F401
-
-        yield from batches
-
-    ncores = spark.sparkContext.defaultParallelism
-    spark.range(ncores, numPartitions=ncores).mapInPandas(
-        _prime_arrow_pool, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # noop sink materializes EVERY output column (count(1) would let Catalyst
-    # prune deterministic projections, under-measuring projection-heavy queries)
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        t0 = time.time()
-        run(qs[name](spark, sf_dir))
-        timings[name] = round(time.time() - t0, 3)
-        print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
-
     # steady-state passes (codegen/compile already paid) — the number that
     # scales with data volume; first-run totals are dominated by fixed
     # per-plan compilation at this small sf. Three warm passes with a
@@ -369,12 +315,18 @@ def main() -> None:
             "0 would leave the warm-sample lists empty and crash in the "
             "median/min reduction far from this misconfiguration."
         )
-    warm_samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
-    for _ in range(WARM_RUNS):
-        for name in HEADLINE:
-            t0 = time.time()
-            run(qs[name](spark, sf_dir))
-            warm_samples[name].append(time.time() - t0)
+
+    import __spark_entry__ as entrymod
+    from sentiment_analysis_bigdata_spark import get_spark
+    from tools.timing import time_passes, warm_up
+
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = entrymod.queries()
+    warm_up(spark, sf_dir)
+
+    cold, warm_samples, errors = time_passes(spark, qs, sf_dir, HEADLINE, WARM_RUNS)
+    timings = {n: round(v, 3) for n, v in cold.items()}
     warm = {n: round(sorted(v)[len(v) // 2], 3) for n, v in warm_samples.items()}
     # Per-query MIN across the warm passes (VERDICT r7 #4): the floor of
     # the co-tenancy distribution. Cross-round deltas read this instead of
@@ -384,17 +336,10 @@ def main() -> None:
     # (e.g. 5) when committing a round's canonical floor.
     warm_min = {n: round(min(v), 3) for n, v in warm_samples.items()}
 
-    extra: dict[str, float] = {}
-    extra_warm: dict[str, float] = {}
-    for name in FAMILY_EXTRA:
-        t0 = time.time()
-        run(qs[name](spark, sf_dir))
-        extra[name] = round(time.time() - t0, 3)
-        print(f"  [extra] {name}: {extra[name]:.3f}s", file=sys.stderr)
-    for name in FAMILY_EXTRA:
-        t0 = time.time()
-        run(qs[name](spark, sf_dir))
-        extra_warm[name] = round(time.time() - t0, 3)
+    extra_cold, extra_samples, extra_errors = time_passes(spark, qs, sf_dir, FAMILY_EXTRA, 1)
+    errors.update(extra_errors)
+    extra = {n: round(v, 3) for n, v in extra_cold.items()}
+    extra_warm = {n: round(v[0], 3) for n, v in extra_samples.items()}
 
     total = round(sum(timings.values()), 3)
     load_end = os.getloadavg()[0]
@@ -418,6 +363,7 @@ def main() -> None:
         "queries_extra_warm": extra_warm,
         "load_factor": {"start_1min": round(load_start, 2), "end_1min": round(load_end, 2)},
         "sf": sf,
+        "errors": errors,
     }
 
     # The recording harness keeps only a bounded TAIL of stdout, and the
@@ -468,6 +414,7 @@ def main() -> None:
         "family_extra_total": full["family_extra_total"],
         "family_extra_warm_total": full["family_extra_warm_total"],
         "n_extra": len(extra),
+        "n_errors": len(errors),
         "load_factor": full["load_factor"],
         "full_results": os.path.relpath(path, os.path.dirname(out_dir)),
         "sf": sf,

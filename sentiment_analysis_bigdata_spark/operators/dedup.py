@@ -357,7 +357,8 @@ def simhash_signatures(
     """(doc_id, simhash): 60-bit SimHash over word tokens.
 
     Kernel shape (the corpus-scale path, measured 3× faster than the
-    per-row HOF expression at sf0.1 — tools/simhash_kernel_bench.py):
+    per-row HOF expression at sf0.1 by the one-off
+    tools/simhash_kernel_bench.py, since removed; see git history):
     the md5 token hashes compute JVM-side exactly as in
     ``hashing.simhash64`` (so the DuckDB oracle replays them bit-for-bit
     and there is no Python tokenizer to keep in sync), then ONE Arrow

@@ -18,6 +18,9 @@ and their semantics are unchanged — only the iteration order.
 
 from __future__ import annotations
 
+import logging
+import pathlib
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,110 +122,6 @@ _HEADLINE: dict[str, list[str]] = {
 }
 
 
-# Rotating driver-certification prefix. The external driver samples the
-# FIRST 50 registry entries for its oracle gate, so this list pins slots
-# 1-50 explicitly. Everything after the prefix keeps the round-robin
-# family interleave. Names not present in any lane are skipped.
-#
-# ROUND 10 (this round): the FINAL certification rotation — exactly the
-# 48-query tail that has never appeared in CORRECTNESS_r01..r09 (pinned
-# as the ROUND-10 PLAN in r9; verified again this round by diffing the
-# registry against all nine CORRECTNESS files), plus 2 long-green
-# canaries (pricing_summary, minhash_near_dups — both driver-green since
-# their first rotation) as drift guards. A green round completes
-# registry-wide driver certification: 348/348 oracle-backed queries
-# checked at least once. The witness-pinned BPE pair (bpe_merges_1k,
-# bpe_encode_1k) stays out by design — they can never produce a driver
-# row (README "Oracle-less pair" note).
-#
-# POST-CERTIFICATION CANARY POLICY (round 11 onward): once every
-# oracle-backed query is certified there is no rotation pressure left;
-# the prefix becomes a pure regression guard. The switch is AUTOMATIC
-# (``_active_prefix`` below): the committed CORRECTNESS_r*.json driver
-# artifacts are the shared ground truth — while any oracle-backed query
-# has never been fully green, the pinned rotation list above stays
-# active (it must carry the stragglers); once the green set covers the
-# registry, the prefix becomes canary_prefix(latest_round + 1), which
-# advances by itself as each round's artifact lands. A query that later
-# turns red re-enters certification pressure only via a fix + its next
-# canary window; a query that was NEVER green keeps rotation mode on,
-# which is the fail-safe (red first-timers are first-class bugs).
-# ``canary_prefix`` (defined below, tested in tests/test_registry.py)
-# draws a DETERMINISTIC 50-query sample over all oracle-backed queries,
-# STRATIFIED by family lane: slots are allocated proportionally to lane
-# size (largest-remainder rounding, every lane gets >= 1), and the
-# window within each lane advances by the lane's own allocation each
-# round, wrapping — so every family is re-checked every round and every
-# query re-certifies within 8 rounds (measured: 10 consecutive samples
-# cover all 348 by the 8th; tests/test_registry.py pins this). Pure
-# function of (round_no, registry): the driver and any local run agree
-# on the sample with no shared state.
-_DRIVER_PREFIX: list[str] = [
-    # ROUND-11 PLAN (written r10): a green CORRECTNESS_r10 completes
-    # registry-wide certification (348/348 oracle-backed + 2
-    # witness-pinned by design). _active_prefix() then switches to
-    # canary_prefix(11) AUTOMATICALLY — no edit needed here; that exact
-    # 50-query sample was pre-validated this round (50/50 green at
-    # sf0.01, BASELINE.md "Round-11 pre-validation"). If any r10 row
-    # comes back red, rotation mode stays on by itself: fix the query,
-    # keep it in this pinned list, re-certify. Registry freeze
-    # discipline continues (cap 356; candidates need genuinely novel
-    # 100 TB-curation semantics + a full oracle).
-    # -- rotation, round 10: the final 48 first-timers --
-    "rbo_rankings",
-    "source_token_drift",
-    "quantile_bins",
-    "bpe_encode_corpus",
-    "l_diversity",
-    "weighted_quantiles",
-    "neyman_allocation",
-    "tokenizer_fertility",
-    "salted_token_counts",
-    "referential_integrity",
-    "delete_cascade_plan",
-    "group_weighted_sample",
-    "lasttouch_attribution",
-    "groupwise_regression",
-    "token_gini",
-    "window_funnel_7d",
-    "label_noise_estimate",
-    "embedding_alignment",
-    "asof_click_fulfillment",
-    "ngram_novelty",
-    "jaccard_threshold_sweep",
-    "runtime_filtered_join",
-    "split_leakage",
-    "term_dispersion",
-    "decayed_engagement",
-    "activity_islands",
-    "code_prose_profile",
-    "table_profile",
-    "top_event_paths",
-    "ngram_diversity",
-    "seasonal_dow_index",
-    "contamination_check",
-    "vocab_coverage",
-    "purged_time_split",
-    "chunk_token_windows",
-    "hourly_to_daily_rollup",
-    "ngram_jaccard_adjacent",
-    "doc_logprob",
-    "fuzzy_part_names",
-    "bigram_logprob",
-    "rate_anomalies",
-    "chi2_lang_terms",
-    "retrieval_metrics",
-    "source_overlap",
-    "hard_negatives",
-    "approx_aggregates",
-    "payload_stats",
-    "important_part_values",
-    # -- canaries (long driver-green; drift guards) --
-    "pricing_summary",
-    "minhash_near_dups",
-]
-
-
 def _lane_names(family: str, modules: list) -> list[str]:
     names: list[str] = []
     for m in modules:
@@ -231,40 +130,16 @@ def _lane_names(family: str, modules: list) -> list[str]:
     return head + [n for n in names if n not in head]
 
 
-def _certification_state() -> tuple[int, set[str]]:
-    """(latest driver round on record, queries ever fully green) from the
-    committed ``CORRECTNESS_r*.json`` artifacts at the repo root. Fully
-    green = rows + schema + hash all matched in at least one round.
-    Missing/unreadable artifacts degrade to (0, empty) — rotation mode —
-    never an import error."""
-    import json
-    import pathlib
-    import re as _re
-
+def _latest_round() -> int:
+    """Highest ``N`` among the committed ``CORRECTNESS_r{N}.json`` driver
+    artifacts at the repo root; 0 when there are none (fresh clone)."""
     root = pathlib.Path(__file__).resolve().parents[2]
-    latest, green = 0, set()
-    try:
-        files = list(root.glob("CORRECTNESS_r*.json"))
-    except OSError:
-        return latest, green
-    for f in files:
-        m = _re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
-        if not m:
-            continue
-        try:
-            data = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        latest = max(latest, int(m.group(1)))
-        for name, row in data.items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                green.add(name)
-    return latest, green
+    rounds = [
+        int(m.group(1))
+        for f in root.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name))
+    ]
+    return max(rounds, default=0)
 
 
 def canary_prefix(round_no: int, slots: int = 50) -> list[str]:
@@ -358,36 +233,15 @@ def _interleaved() -> list[tuple[str, tuple]]:
 
 
 def _active_prefix() -> list[str]:
-    """The prefix the driver should sample THIS round: the pinned
-    rotation while any oracle-backed query has never been fully green
-    (the pinned list carries exactly those stragglers + canaries), else
-    the deterministic canary sample for the upcoming round. See the
-    POST-CERTIFICATION CANARY POLICY comment above _DRIVER_PREFIX."""
-    import logging
-
-    latest, green = _certification_state()
-    oracle_backed = {
-        name
-        for _family, modules in _FAMILIES
-        for m in modules
-        for name, entry in m.QUERIES.items()
-        if entry[1] is not None
-    }
-    log = logging.getLogger(__name__)
-    if oracle_backed - green:
-        # The prefix depends on the CORRECTNESS_r*.json artifacts on
-        # disk; log the resolution so a checkout whose artifact set
-        # differs from the driver's (ADVICE r10) is diagnosable.
-        log.info(
-            "driver prefix: ROTATION mode (%d oracle-backed queries never "
-            "fully green; latest artifact round %d)",
-            len(oracle_backed - green),
-            latest,
-        )
-        return _DRIVER_PREFIX
-    log.info(
-        "driver prefix: CANARY mode, canary_prefix(%d) "
-        "(registry fully certified through round %d)",
+    """The external driver samples the FIRST 50 registry entries for its
+    oracle gate, so those slots hold the stratified canary sample for the
+    upcoming round; it advances by itself as each round's
+    ``CORRECTNESS_r{N}.json`` artifact lands."""
+    latest = _latest_round()
+    # The prefix depends on the artifacts on disk; log the resolution so a
+    # checkout whose artifact set differs from the driver's is diagnosable.
+    logging.getLogger(__name__).info(
+        "driver prefix: canary_prefix(%d) (latest artifact round %d)",
         latest + 1,
         latest,
     )

@@ -1,8 +1,8 @@
-"""Registry invariants: the driver-certification prefix and the r11+
-post-certification canary policy (``canary_prefix``).
+"""Registry invariants: the driver-certification prefix and the canary
+policy (``canary_prefix``).
 
 Pure registry logic — no SparkSession needed, so these run in
-milliseconds and guard the rotation machinery itself: the external
+milliseconds and guard the prefix machinery itself: the external
 driver samples ``all_queries()``'s first 50 names, so a broken prefix
 or a non-deterministic canary sample silently voids the correctness
 gate.
@@ -10,15 +10,14 @@ gate.
 
 from __future__ import annotations
 
-import json
 import pathlib
+import re
 
 import pytest
 
 from sentiment_analysis_bigdata_spark.workloads import (
-    _DRIVER_PREFIX,
     _active_prefix,
-    _certification_state,
+    _latest_round,
     all_oracles,
     all_queries,
     canary_prefix,
@@ -39,64 +38,28 @@ class TestDriverPrefix:
         assert names[:50] == active
         assert len(active) == 50
         assert len(set(active)) == 50
-        assert len(set(_DRIVER_PREFIX)) == len(_DRIVER_PREFIX) == 50
 
     def test_prefix_all_oracle_backed(self, registry):
         _, oracles = registry
-        for prefix in (_DRIVER_PREFIX, _active_prefix()):
-            missing = [n for n in prefix if n not in oracles]
-            assert not missing, f"prefix entries without oracle SQL: {missing}"
+        missing = [n for n in _active_prefix() if n not in oracles]
+        assert not missing, f"prefix entries without oracle SQL: {missing}"
 
-    def test_mode_switch_rotation_vs_canary(self, registry, monkeypatch):
-        """While any oracle-backed query was never fully green, the
-        pinned rotation is active; once the green set covers the
-        registry, the prefix self-advances to canary_prefix(latest+1)."""
+    def test_mode_switch_rotation_vs_canary(self, monkeypatch):
+        """The prefix is canary_prefix(latest + 1) for every latest
+        artifact round, including 0 (no artifacts, fresh clone)."""
         import sentiment_analysis_bigdata_spark.workloads as W
 
-        _, oracles = registry
-        some = next(iter(oracles))
-        monkeypatch.setattr(
-            W, "_certification_state", lambda: (10, set(oracles) - {some})
-        )
-        assert W._active_prefix() == W._DRIVER_PREFIX
-        monkeypatch.setattr(W, "_certification_state", lambda: (10, set(oracles)))
-        assert W._active_prefix() == W.canary_prefix(11)
-        monkeypatch.setattr(W, "_certification_state", lambda: (11, set(oracles)))
-        assert W._active_prefix() == W.canary_prefix(12)
-        # missing artifacts (fresh clone) degrade to rotation mode
-        monkeypatch.setattr(W, "_certification_state", lambda: (0, set()))
-        assert W._active_prefix() == W._DRIVER_PREFIX
+        for latest in (0, 10, 11):
+            monkeypatch.setattr(W, "_latest_round", lambda latest=latest: latest)
+            assert W._active_prefix() == W.canary_prefix(latest + 1)
 
     def test_certification_state_reads_artifacts(self):
-        latest, green = _certification_state()
-        files = sorted(REPO.glob("CORRECTNESS_r*.json"))
-        if not files:
-            assert (latest, green) == (0, set())
-            return
-        assert latest >= 9
-        # spot checks against the committed r9 artifact
-        assert "token_topk" in green
-        assert "bpe_merges_1k" not in green  # witness-pinned, never a row
-
-    def test_r10_prefix_completes_certification(self, registry):
-        """The round-10 rotation = every never-certified oracle-backed
-        query (48) + 2 previously-green canaries: after a green round,
-        cumulative driver certification is exactly the oracle-backed
-        registry. Recomputed from the committed CORRECTNESS files so the
-        pinned list can't drift from the evidence."""
-        names, oracles = registry
-        certified: set[str] = set()
-        for f in sorted(REPO.glob("CORRECTNESS_r0*.json")):
-            for k, v in json.loads(f.read_text()).items():
-                if isinstance(v, dict):
-                    certified.add(k)
-        if not certified:  # fresh clone without driver artifacts
-            pytest.skip("no CORRECTNESS_r*.json present")
-        never = {n for n in oracles if n not in certified}
-        prefix = set(_DRIVER_PREFIX)
-        assert never <= prefix, f"uncertified queries left out of prefix: {sorted(never - prefix)}"
-        canaries = prefix - never
-        assert canaries <= certified, f"canaries never driver-certified: {sorted(canaries - certified)}"
+        rounds = [
+            int(m.group(1))
+            for f in REPO.glob("CORRECTNESS_r*.json")
+            if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name))
+        ]
+        assert _latest_round() == max(rounds, default=0)
 
 
 class TestCanaryPolicy:

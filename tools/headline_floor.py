@@ -12,16 +12,24 @@ and run BOTH checkouts back-to-back in both orders — the r12 disposition
 exceeding the between-code delta (0.07 s), settling the question in four
 5-minute runs.
 
+The target checkout supplies HEADLINE and the registry; warm-up and
+timing always come from THIS checkout's tools/timing.py (imported before
+the target joins sys.path), so both sides of an A/B are measured by the
+same timer even when the target predates it.
+
 PYTHONPATH must carry the target checkout so local-mode Python workers
 can import the package (driver-side sys.path does not propagate).
 
 Usage:
     PYTHONPATH=<repo_dir> python tools/headline_floor.py <repo_dir> [warm_runs]
+
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 test data, as in bench.py).
 """
 import json
 import os
 import sys
-import time
+
+from timing import time_passes, warm_up  # this script's own directory
 
 repo = sys.argv[1]
 warm_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
@@ -30,39 +38,17 @@ sys.path.insert(0, repo)
 import bench  # noqa: E402  (the checkout's own HEADLINE list)
 import __spark_entry__ as entrymod  # noqa: E402
 from sentiment_analysis_bigdata_spark import get_spark  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
-sf_dir = "/root/testdata/sf0.1"
+sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 load_start = os.getloadavg()[0]
 spark = get_spark("headline-probe")
 spark.sparkContext.setLogLevel("ERROR")
-qs = entrymod.queries()
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
-    spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).count()
-spark.range(10).select(
-    F.aggregate(F.array(F.col("id")), F.lit(0).cast("bigint"), lambda a, b: a + b)
-).count()
+warm_up(spark, sf_dir)
+cold, samples, errors = time_passes(
+    spark, entrymod.queries(), sf_dir, bench.HEADLINE, warm_runs
+)
 
-
-def run(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-cold = {}
-for name in bench.HEADLINE:
-    t0 = time.time()
-    run(qs[name](spark, sf_dir))
-    cold[name] = round(time.time() - t0, 3)
-
-samples = {n: [] for n in bench.HEADLINE}
-for _ in range(warm_runs):
-    for name in bench.HEADLINE:
-        t0 = time.time()
-        run(qs[name](spark, sf_dir))
-        samples[name].append(round(time.time() - t0, 3))
-
-warm_min = {n: min(v) for n, v in samples.items()}
+warm_min = {n: round(min(v), 3) for n, v in samples.items()}
 print(json.dumps({
     "repo": repo,
     "cold_total": round(sum(cold.values()), 3),
@@ -70,5 +56,6 @@ print(json.dumps({
     "warm_runs": warm_runs,
     "queries_warm_min": warm_min,
     "load": {"start": round(load_start, 2), "end": round(os.getloadavg()[0], 2)},
+    "errors": errors,
 }))
 spark.stop()

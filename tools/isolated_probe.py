@@ -7,7 +7,10 @@ Usage:
     python tools/isolated_probe.py [--sf DIR] [--warm N] query [query ...]
 
 Prints one JSON line per query: {"query": ..., "cold": s, "warm": [s...],
-"load_start": l}. Env: SPARK_GRAFT_SF_DIR overrides --sf default.
+"warm_min": s, "load_start": l}, or {"query": ..., "error": "<Type>: <msg>",
+"load_start": l} when the query raised. Env: SPARK_GRAFT_SF_DIR overrides
+--sf default. Warm-up and timing come from tools/timing.py, shared with
+bench.py.
 """
 
 from __future__ import annotations
@@ -16,7 +19,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,48 +32,31 @@ def main() -> int:
     ap.add_argument("--warm", type=int, default=3)
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
+    if args.warm < 1:
+        ap.error("--warm must be >= 1 (warm_min needs a sample)")
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
-
     from sentiment_analysis_bigdata_spark import get_spark
+    from tools.timing import time_passes, warm_up
 
     spark = get_spark("isolated-probe")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    # same warmup as bench.py so the first probed query isn't billed for
-    # table-footer reads / HOF machinery
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        spark.read.parquet(f"{args.sf}/{t}.parquet").limit(1).count()
-    spark.range(10).select(
-        F.aggregate(F.array(F.col("id")), F.lit(0).cast("bigint"), lambda a, b: a + b)
-    ).count()
-
-    def run(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"probe: {name}")
-        t0 = time.time()
-        qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        spark.sparkContext.setJobDescription(None)
-        return dt
+    warm_up(spark, args.sf)
 
     for name in args.queries:
         load = os.getloadavg()[0]
-        cold = run(name)
-        warm = [run(name) for _ in range(args.warm)]
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "cold": round(cold, 3),
-                    "warm": [round(w, 3) for w in warm],
-                    "warm_min": round(min(warm), 3),
-                    "load_start": round(load, 2),
-                }
-            ),
-            flush=True,
-        )
+        cold, warm, errors = time_passes(spark, qs, args.sf, [name], args.warm)
+        if name in errors:
+            row = {"query": name, "error": errors[name]}
+        else:
+            row = {
+                "query": name,
+                "cold": round(cold[name], 3),
+                "warm": [round(w, 3) for w in warm[name]],
+                "warm_min": round(min(warm[name]), 3),
+            }
+        print(json.dumps({**row, "load_start": round(load, 2)}), flush=True)
     spark.stop()
     return 0
 
