@@ -306,6 +306,14 @@ def heatmap(
     return path
 
 
+def confusion_heatmap(path: str, cm: dict[str, int], title: str) -> str:
+    """``heatmap`` of a metrics-JSON confusion dict (``"label_prediction"``
+    → count): the k×k matrix over every class seen as a label or a
+    prediction, absent cells 0."""
+    classes = sorted({int(c) for key in cm for c in key.split("_")})
+    return heatmap(path, [[cm.get(f"{a}_{p}", 0) for p in classes] for a in classes], title=title)
+
+
 def roc_curve_png(
     path: str,
     points: Sequence[tuple[float, float]],

@@ -237,14 +237,10 @@ def compare_models(
         )
         for name in names:
             cm = merged[name].get("confusion_matrix") or {}
-            if not cm:
-                continue
-            classes = sorted(
-                {int(k.split("_")[0]) for k in cm} | {int(k.split("_")[1]) for k in cm}
-            )
-            charts.heatmap(
-                os.path.join(charts_dir, f"confusion_matrix_{name}.png"),
-                [[cm.get(f"{a}_{p}", 0) for p in classes] for a in classes],
-                title=f"CONFUSION ({name.upper()})",
-            )
+            if cm:
+                charts.confusion_heatmap(
+                    os.path.join(charts_dir, f"confusion_matrix_{name}.png"),
+                    cm,
+                    title=f"CONFUSION ({name.upper()})",
+                )
     return merged

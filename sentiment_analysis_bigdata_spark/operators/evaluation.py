@@ -46,66 +46,106 @@ def confusion_matrix_pivot(
     )
 
 
+def _confusion_rows(df: DataFrame, label_col: str, pred_col: str) -> list[tuple]:
+    """The one driver action behind every confusion-based metric: collect
+    the ≤k² ``confusion_matrix`` rows as (label, prediction, n), ordered by
+    label then prediction, ascending with nulls first (``orderBy``'s order,
+    sorted on the driver so the collect stays a single aggregation)."""
+    rows = [tuple(r) for r in confusion_matrix(df, label_col, pred_col).collect()]
+    return sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0, r[1] is not None, r[1] or 0))
+
+
+def _accuracy_of(cm: list[tuple]) -> float:
+    """Accuracy from confusion rows; a null label or prediction is skipped,
+    as ``avg`` skips the null comparison."""
+    pairs = [(label == pred, n) for label, pred, n in cm if label is not None and pred is not None]
+    total = sum(n for _, n in pairs)
+    if not total:
+        raise ValueError("accuracy of an empty input: no row has a non-null label and prediction")
+    return sum(n for hit, n in pairs if hit) / total
+
+
+def _per_class(cm: list[tuple]) -> list[tuple]:
+    """(label, tp, fp, fn, support, precision, recall, f1) per label value,
+    from confusion rows. A null label matches no prediction (tp = fp = 0);
+    a null prediction counts toward its label's support and fn only."""
+    support, predicted, tp = {}, {}, {}
+    for label, pred, n in cm:
+        support[label] = support.get(label, 0) + n
+        if pred is not None:
+            predicted[pred] = predicted.get(pred, 0) + n
+            if label == pred:
+                tp[label] = n
+    rows = []
+    for label, sup in support.items():
+        t, pn = tp.get(label, 0), predicted.get(label, 0)
+        precision = t / pn if pn > 0 else 0.0
+        recall = t / sup
+        f1 = 2 * precision * recall / (precision + recall) if precision + recall > 0 else 0.0
+        rows.append((label, t, pn - t, sup - t, sup, precision, recall, f1))
+    return rows
+
+
+def _weighted_f1_of(cm: list[tuple]) -> float:
+    """Support-weighted F1 from confusion rows."""
+    report = _per_class(cm)
+    total = sum(r[4] for r in report)
+    if not total:
+        raise ValueError("weighted F1 of an empty input: the frame has no rows")
+    return sum(r[7] * r[4] for r in report) / total
+
+
 def accuracy(df: DataFrame, label_col: str = "label", pred_col: str = "prediction") -> float:
-    """A6 — fraction correct, as one ``avg`` aggregation."""
-    row = df.agg(
-        F.avg((F.col(label_col) == F.col(pred_col)).cast("double")).alias("acc")
-    ).first()
-    return float(row["acc"])
+    """A6 — fraction correct, derived from one confusion collect. Labels
+    and predictions are class indices, as ``confusion_matrix``'s int cast
+    assumes. Raises ``ValueError`` on an empty input."""
+    return _accuracy_of(_confusion_rows(df, label_col, pred_col))
+
+
+_REPORT_COLUMNS = ("label", "tp", "fp", "fn", "support", "precision", "recall", "f1")
+_REPORT_SCHEMA = (
+    "label int, tp bigint, fp bigint, fn bigint, support bigint, "
+    "precision double, recall double, f1 double"
+)
 
 
 def classification_report(
     df: DataFrame, label_col: str = "label", pred_col: str = "prediction"
 ) -> DataFrame:
-    """A7 — per-class precision/recall/F1 from the confusion counts.
+    """A7 — per-class precision/recall/F1, derived from one confusion
+    collect. Labels and predictions are class indices, as
+    ``confusion_matrix``'s int cast assumes.
 
-    Returns (label, tp, fp, fn, support, precision, recall, f1). All from a
-    single confusion aggregation joined three ways on tiny (k-row) frames —
-    the joins are driver-negligible broadcast joins.
+    Returns (label, tp, fp, fn, support, precision, recall, f1), one row
+    per label value. The ≤k rows are built on the driver and handed back
+    as an Arrow table, which Spark keeps as a local relation: collecting
+    the report runs no further job.
     """
-    cm = confusion_matrix(df, label_col, pred_col)
-    tp = cm.filter(F.col("label") == F.col("prediction")).select(
-        F.col("label"), F.col("n").alias("tp")
-    )
-    support = cm.groupBy("label").agg(F.sum("n").alias("support"))
-    predicted = cm.groupBy(F.col("prediction").alias("label")).agg(
-        F.sum("n").alias("predicted_n")
-    )
-    out = (
-        support.join(tp, "label", "left")
-        .join(predicted, "label", "left")
-        .na.fill({"tp": 0, "predicted_n": 0})
-        .withColumn("fp", F.col("predicted_n") - F.col("tp"))
-        .withColumn("fn", F.col("support") - F.col("tp"))
-        .withColumn(
-            "precision",
-            F.when(F.col("predicted_n") > 0, F.col("tp") / F.col("predicted_n")).otherwise(0.0),
-        )
-        .withColumn(
-            "recall",
-            F.when(F.col("support") > 0, F.col("tp") / F.col("support")).otherwise(0.0),
-        )
-        .withColumn(
-            "f1",
-            F.when(
-                (F.col("precision") + F.col("recall")) > 0,
-                2 * F.col("precision") * F.col("recall") / (F.col("precision") + F.col("recall")),
-            ).otherwise(0.0),
-        )
-        .select("label", "tp", "fp", "fn", "support", "precision", "recall", "f1")
-    )
-    return out
+    import pyarrow as pa
+
+    rows = _per_class(_confusion_rows(df, label_col, pred_col))
+    table = pa.table({c: [r[i] for r in rows] for i, c in enumerate(_REPORT_COLUMNS)})
+    return df.sparkSession.createDataFrame(table, _REPORT_SCHEMA)
 
 
 def weighted_f1(df: DataFrame, label_col: str = "label", pred_col: str = "prediction") -> float:
     """A7 — support-weighted F1 (parity with
     MulticlassClassificationEvaluator(metricName='f1'), reference
-    model_logistic_regression.py:189-193)."""
-    rep = classification_report(df, label_col, pred_col)
-    row = rep.agg(
-        (F.sum(F.col("f1") * F.col("support")) / F.sum("support")).alias("wf1")
-    ).first()
-    return float(row["wf1"])
+    model_logistic_regression.py:189-193), derived from one confusion
+    collect. Labels and predictions are class indices, as
+    ``confusion_matrix``'s int cast assumes. Raises ``ValueError`` on an
+    empty input."""
+    return _weighted_f1_of(_confusion_rows(df, label_col, pred_col))
+
+
+def _score_counts(df: DataFrame, label_col: str, score_col: str) -> DataFrame:
+    """Per distinct score: (score, pos_s = positives, cnt_s = rows). One
+    partial+final hash aggregation over the raw rows — the frame every
+    threshold curve below windows over, #thresholds rows, never #rows."""
+    return df.groupBy(F.col(score_col).alias("score")).agg(
+        F.sum(F.when(F.col(label_col) == 1, 1).otherwise(0)).alias("pos_s"),
+        F.count(F.lit(1)).alias("cnt_s"),
+    )
 
 
 def roc_auc(df: DataFrame, label_col: str = "label", score_col: str = "score") -> float:
@@ -126,12 +166,8 @@ def roc_auc(df: DataFrame, label_col: str = "label", score_col: str = "score") -
     products stay exact in doubles). At extreme scale the histogram
     variant below bounds even the distinct-score cardinality.
     """
-    by_score = df.groupBy(F.col(score_col).alias("s")).agg(
-        F.sum(F.when(F.col(label_col) == 1, 1).otherwise(0)).alias("pos_s"),
-        F.count(F.lit(1)).alias("cnt_s"),
-    )
-    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = by_score.withColumn(
+    w = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
+    ranked = _score_counts(df, label_col, score_col).withColumn(
         "before", F.coalesce(F.sum("cnt_s").over(w), F.lit(0))
     )
     agg = ranked.agg(
@@ -236,15 +272,11 @@ def roc_points(df: DataFrame, label_col: str = "label", score_col: str = "score"
         F.sum(F.when(F.col(label_col) == 1, 1).otherwise(0)).alias("P"),
         F.sum(F.when(F.col(label_col) != 1, 1).otherwise(0)).alias("N"),
     ).first()
-    by_score = df.groupBy(F.col(score_col).alias("score")).agg(
-        F.sum(F.when(F.col(label_col) == 1, 1).otherwise(0)).alias("pos_s"),
-        F.count(F.lit(1)).alias("cnt_s"),
-    )
     w = Window.orderBy(F.col("score").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     cum = (
-        by_score.withColumn("tp", F.sum("pos_s").over(w))
+        _score_counts(df, label_col, score_col).withColumn("tp", F.sum("pos_s").over(w))
         .withColumn("n", F.sum("cnt_s").over(w))
         .withColumn("fp", F.col("n") - F.col("tp"))
         .select(
@@ -288,15 +320,11 @@ def pr_points(
             ),
         )
         return empty
-    by_score = df.groupBy(F.col(score_col).alias("score")).agg(
-        F.sum(F.when(F.col(label_col) == 1, 1).otherwise(0)).alias("pos_s"),
-        F.count(F.lit(1)).alias("cnt_s"),
-    )
     w = Window.orderBy(F.col("score").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        by_score.withColumn("tp", F.sum("pos_s").over(w))
+        _score_counts(df, label_col, score_col).withColumn("tp", F.sum("pos_s").over(w))
         .withColumn("n", F.sum("cnt_s").over(w))
         .select(
             "score",

@@ -11,10 +11,10 @@ against the persisted stage metadata under the reference's ``model/`` tree):
   CountVectorizer(vocab 10k, minDF 5) per n → IDF per n → VectorAssembler →
   classifier (reference model_logistic_regression.py:124-150, model_svm.py)
 
-``evaluate`` replaces the reference's evaluator+sklearn+toPandas block with
-the distributed aggregations in ``operators.evaluation`` and caches the
-scored frame once (fixing the 5× lineage recomputation called out in
-SURVEY §3).
+``fit_and_evaluate`` replaces the reference's evaluator+sklearn+toPandas
+block with the distributed aggregations in ``operators.evaluation`` and
+caches the scored frame once (fixing the 5× lineage recomputation called
+out in SURVEY §3).
 """
 
 from __future__ import annotations
@@ -127,18 +127,16 @@ def build_pipeline(model: str, cfg: PipelineConfig | None = None) -> Pipeline:
 
 def _scored_metrics(scored: DataFrame, with_score: DataFrame, cfg: "PipelineConfig") -> dict:
     """Distributed metrics over a cached scored frame (same dict shape as
-    the reference's metrics JSONs)."""
+    the reference's metrics JSONs). Accuracy, F1, the confusion dict and
+    the row count derive from one confusion collect; ROC-AUC reads the
+    scores."""
+    cm = evaluation._confusion_rows(scored, cfg.label_col, "prediction")
     return {
-        "accuracy": evaluation.accuracy(scored, cfg.label_col, "prediction"),
-        "f1": evaluation.weighted_f1(scored, cfg.label_col, "prediction"),
+        "accuracy": evaluation._accuracy_of(cm),
+        "f1": evaluation._weighted_f1_of(cm),
         "roc_auc": evaluation.roc_auc(with_score, cfg.label_col, "score"),
-        "confusion_matrix": {
-            f"{r['label']}_{r['prediction']}": r["n"]
-            for r in evaluation.confusion_matrix(scored, cfg.label_col, "prediction")
-            .orderBy("label", "prediction")
-            .collect()
-        },
-        "test_rows": scored.count(),
+        "confusion_matrix": {f"{label}_{pred}": n for label, pred, n in cm},
+        "test_rows": sum(n for _, _, n in cm),
     }
 
 
@@ -147,22 +145,54 @@ def fit_and_evaluate(
     test: DataFrame,
     model: str,
     cfg: PipelineConfig | None = None,
-) -> dict:
-    """Fit on an EXPLICIT train frame, evaluate on an explicit test frame
-    — the building block for deterministic k-fold cross-validation
-    (hash folds, no RNG), where the caller owns the split."""
+    charts_dir: str | None = None,
+) -> tuple[PipelineModel, dict]:
+    """Fit on an EXPLICIT train frame → distributed evaluation on an
+    explicit test frame; the caller owns the split (seeded random in
+    ``train_and_evaluate``, hash folds in ``cross_validate_folds``).
+    Returns (fitted model, metrics dict matching the reference's metrics
+    JSON shape: accuracy, f1, roc_auc, confusion_matrix, test_rows).
+
+    The scored test frame is cached once and reused by all metrics
+    (the reference recomputed the transform lineage 5×, SURVEY §3).
+
+    ROC-AUC uses ``rawPrediction[1]`` for ALL models — the reference's
+    metrics JSONs come from ``BinaryClassificationEvaluator`` with its
+    default rawPrediction column (model_*.py:196-204), which for NB yields
+    the miscalibrated ~0.53 AUC (BASELINE.md caveat: reproduce, don't
+    "fix" by switching to the normalized probability).
+    """
     cfg = cfg or PipelineConfig()
     fitted = build_pipeline(model, cfg).fit(train)
     scored = fitted.transform(test).cache()
     try:
         from pyspark.ml.functions import vector_to_array
 
-        with_score = scored.withColumn(
-            "score", vector_to_array(F.col("rawPrediction"))[1]
-        )
-        return _scored_metrics(scored, with_score, cfg)
+        with_score = scored.withColumn("score", vector_to_array(F.col("rawPrediction"))[1])
+        metrics = _scored_metrics(scored, with_score, cfg)
+        if charts_dir:
+            # reference chart parity (model_logistic_regression.py:261-296),
+            # rendered from the distributed aggregates while the scored
+            # frame is still cached — k-row confusion counts and ≤256
+            # binned ROC points reach the driver, never row data
+            import os
+
+            from sentiment_analysis_bigdata_spark.apps import charts
+
+            charts.confusion_heatmap(
+                os.path.join(charts_dir, f"confusion_matrix_{model}.png"),
+                metrics["confusion_matrix"],
+                title=f"CONFUSION MATRIX ({model.upper()})",
+            )
+            charts.roc_curve_png(
+                os.path.join(charts_dir, f"roc_curve_{model}.png"),
+                evaluation.roc_points_binned(with_score, cfg.label_col, "score"),
+                auc_value=metrics["roc_auc"],
+                title=f"ROC CURVE ({model.upper()})",
+            )
     finally:
         scored.unpersist()
+    return fitted, metrics
 
 
 def cross_validate_folds(
@@ -190,7 +220,7 @@ def cross_validate_folds(
     for f in range(k):
         train = keyed.filter(F.col("__fold") != f).drop("__fold", id_col)
         test = keyed.filter(F.col("__fold") == f).drop("__fold", id_col)
-        out.append((f, fit_and_evaluate(train, test, model, cfg)))
+        out.append((f, fit_and_evaluate(train, test, model, cfg)[1]))
     return out
 
 
@@ -200,56 +230,11 @@ def train_and_evaluate(
     cfg: PipelineConfig | None = None,
     charts_dir: str | None = None,
 ) -> tuple[PipelineModel, dict]:
-    """Train/test split → fit → distributed evaluation. Returns
-    (fitted model, metrics dict matching the reference's metrics JSON shape:
-    accuracy, f1, roc_auc, confusion_matrix).
-
-    The scored test frame is cached once and reused by all metrics
-    (the reference recomputed the transform lineage 5×, SURVEY §3).
-
-    ROC-AUC uses ``rawPrediction[1]`` for ALL models — the reference's
-    metrics JSONs come from ``BinaryClassificationEvaluator`` with its
-    default rawPrediction column (model_*.py:196-204), which for NB yields
-    the miscalibrated ~0.53 AUC (BASELINE.md caveat: reproduce, don't
-    "fix" by switching to the normalized probability).
-    """
+    """Seeded train/test ``randomSplit`` (``cfg.split``, ``cfg.seed``) →
+    :func:`fit_and_evaluate`. Returns (fitted model, metrics dict)."""
     cfg = cfg or PipelineConfig()
     train, test = df.randomSplit(list(cfg.split), seed=cfg.seed)
-    fitted = build_pipeline(model, cfg).fit(train)
-    scored = fitted.transform(test).cache()
-    try:
-        from pyspark.ml.functions import vector_to_array
-
-        with_score = scored.withColumn("score", vector_to_array(F.col("rawPrediction"))[1])
-        metrics = _scored_metrics(scored, with_score, cfg)
-        if charts_dir:
-            # reference chart parity (model_logistic_regression.py:261-296),
-            # rendered from the distributed aggregates while the scored
-            # frame is still cached — k-row confusion counts and ≤256
-            # binned ROC points reach the driver, never row data
-            import os
-
-            from sentiment_analysis_bigdata_spark.apps import charts
-
-            cm = metrics["confusion_matrix"]
-            classes = sorted({int(k.split("_")[0]) for k in cm} | {int(k.split("_")[1]) for k in cm})
-            matrix = [
-                [cm.get(f"{a}_{p}", 0) for p in classes] for a in classes
-            ]
-            charts.heatmap(
-                os.path.join(charts_dir, f"confusion_matrix_{model}.png"),
-                matrix,
-                title=f"CONFUSION MATRIX ({model.upper()})",
-            )
-            charts.roc_curve_png(
-                os.path.join(charts_dir, f"roc_curve_{model}.png"),
-                evaluation.roc_points_binned(with_score, cfg.label_col, "score"),
-                auc_value=metrics["roc_auc"],
-                title=f"ROC CURVE ({model.upper()})",
-            )
-    finally:
-        scored.unpersist()
-    return fitted, metrics
+    return fit_and_evaluate(train, test, model, cfg, charts_dir)
 
 
 def tune(

@@ -93,21 +93,14 @@ def _barrier(df: DataFrame, eager: bool) -> DataFrame:
         finally:
             cached.unpersist(blocking=False)
     # lazy: persist so the eventual checkpoint write reads cached blocks
-    # instead of recomputing. Default MEMORY_AND_DISK: if the frame is
-    # bigger than executor memory, MEMORY_ONLY partitions get LRU-evicted
-    # before the lazy checkpoint materializes and the write recomputes
-    # the whole subtree — exactly the double-compute the persist exists
-    # to avoid (ADVICE r10). The cost is spill blocks with no explicit
-    # unpersist point here (the materialization site is unknown); they
-    # are reclaimed when the session's ContextCleaner GCs the RDD, and
-    # long-running sessions that would rather re-pay compute than hold
-    # disk can set SPARK_GRAFT_LAZY_BARRIER_LEVEL=MEMORY_ONLY.
-    level = getattr(
-        StorageLevel,
-        os.environ.get("SPARK_GRAFT_LAZY_BARRIER_LEVEL", "MEMORY_AND_DISK"),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    return df.persist(level).checkpoint(eager=False)
+    # instead of recomputing. MEMORY_AND_DISK: if the frame is bigger
+    # than executor memory, MEMORY_ONLY partitions get LRU-evicted before
+    # the lazy checkpoint materializes and the write recomputes the whole
+    # subtree — exactly the double-compute the persist exists to avoid
+    # (ADVICE r10). The cost is spill blocks with no explicit unpersist
+    # point here (the materialization site is unknown); they are
+    # reclaimed when the session's ContextCleaner GCs the RDD.
+    return df.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(eager=False)
 
 
 def barrier_eager(df: DataFrame) -> DataFrame:

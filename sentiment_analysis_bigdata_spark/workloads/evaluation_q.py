@@ -332,26 +332,28 @@ def _synthetic_tweets(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _metrics_row(spark: SparkSession, m: dict) -> DataFrame:
-    """One all-integer metrics row: binary confusion counts (positive
-    class = 1) plus ppm-scaled accuracy/F1/AUC. Integer-only output is
-    partition-order-proof AND engine-hash-proof (no float formatting)."""
+_METRICS_SCHEMA = (
+    "n_test bigint, tp bigint, fp bigint, fn bigint, tn bigint, "
+    "accuracy_ppm bigint, f1_ppm bigint, auc_ppm bigint"
+)
+
+
+def _metrics_values(m: dict) -> tuple:
+    """A metrics dict as all-integer values: binary confusion counts
+    (positive class = 1) plus ppm-scaled accuracy/F1/AUC. Integer-only
+    output is partition-order-proof AND engine-hash-proof (no float
+    formatting)."""
     cm = m["confusion_matrix"]
-    row = (
+    return (
         int(m["test_rows"]),
-        int(cm.get("1_1", 0)),
-        int(cm.get("0_1", 0)),
-        int(cm.get("1_0", 0)),
-        int(cm.get("0_0", 0)),
-        int(round(m["accuracy"] * 1_000_000)),
-        int(round(m["f1"] * 1_000_000)),
-        int(round(m["roc_auc"] * 1_000_000)),
+        *(int(cm.get(key, 0)) for key in ("1_1", "0_1", "1_0", "0_0")),
+        *(int(round(m[key] * 1_000_000)) for key in ("accuracy", "f1", "roc_auc")),
     )
-    return spark.createDataFrame(
-        [row],
-        "n_test bigint, tp bigint, fp bigint, fn bigint, tn bigint, "
-        "accuracy_ppm bigint, f1_ppm bigint, auc_ppm bigint",
-    )
+
+
+def _metrics_row(spark: SparkSession, m: dict) -> DataFrame:
+    """One ``_metrics_values`` row (``_METRICS_SCHEMA``)."""
+    return spark.createDataFrame([_metrics_values(m)], _METRICS_SCHEMA)
 
 
 def _metrics_literal_sql(n_test, tp, fp, fn, tn, acc, f1, auc) -> str:
@@ -399,7 +401,6 @@ def q_ml_linear_svc(spark: SparkSession, sf: str) -> DataFrame:
     return _metrics_row(spark, m)
 
 
-
 def q_ml_crossval(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic 3-fold cross-validation of the LR pipeline
     (operators/ml.cross_validate_folds): fold = doc_id % 3 — a stable
@@ -418,26 +419,8 @@ def q_ml_crossval(spark: SparkSession, sf: str) -> DataFrame:
     )
     cfg = ML.PipelineConfig(num_features=2**16)
     folds = ML.cross_validate_folds(base, "lr", k=3, cfg=cfg, id_col="doc_id")
-    rows = []
-    for f, m in folds:
-        cm = m["confusion_matrix"]
-        rows.append(
-            (
-                f,
-                int(m["test_rows"]),
-                int(cm.get("1_1", 0)),
-                int(cm.get("0_1", 0)),
-                int(cm.get("1_0", 0)),
-                int(cm.get("0_0", 0)),
-                int(round(m["accuracy"] * 1_000_000)),
-                int(round(m["f1"] * 1_000_000)),
-                int(round(m["roc_auc"] * 1_000_000)),
-            )
-        )
     return spark.createDataFrame(
-        rows,
-        "fold int, n_test bigint, tp bigint, fp bigint, fn bigint, tn bigint, "
-        "accuracy_ppm bigint, f1_ppm bigint, auc_ppm bigint",
+        [(f, *_metrics_values(m)) for f, m in folds], "fold int, " + _METRICS_SCHEMA
     )
 
 

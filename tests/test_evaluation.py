@@ -58,6 +58,55 @@ def test_weighted_f1_matches_mllib(spark, preds):
     assert EV.weighted_f1(preds) == pytest.approx(ev.evaluate(d), abs=1e-12)
 
 
+def test_null_rows_and_empty_input(spark):
+    """Null semantics of the confusion-derived metrics: accuracy skips a
+    null label or prediction; the report keeps a null-label row with
+    tp = fp = 0; (1, None) counts toward label 1's support and fn. An
+    empty frame raises ValueError rather than dividing by nothing."""
+    rows = PRED_ROWS + [(None, 1), (1, None), (None, None)]
+    df = spark.createDataFrame(rows, "label int, prediction int")
+    assert EV.accuracy(df) == 0.65
+    rep = {r["label"]: tuple(r)[1:] for r in EV.classification_report(df).collect()}
+    assert rep[0][:4] == (6, 3, 4, 10)
+    assert rep[1][:4] == (7, 5, 4, 11)
+    assert rep[None] == (0, 0, 2, 2, 0.0, 0.0, 0.0)
+    assert EV.weighted_f1(df) == 0.5657148542433589
+
+    empty = spark.createDataFrame([], "label int, prediction int")
+    with pytest.raises(ValueError, match="empty input"):
+        EV.accuracy(empty)
+    with pytest.raises(ValueError, match="empty input"):
+        EV.weighted_f1(empty)
+
+
+def test_confusion_metrics_job_counts(spark):
+    """Every confusion-based metric derives from ONE confusion collect
+    (measured via a job group): weighted F1 and the report cost the
+    aggregation's jobs only; the ML metrics dict adds just ROC-AUC."""
+    from sentiment_analysis_bigdata_spark.operators import ml as ML
+
+    rows = [(i % 2, float(i * 11 % 3 % 2), (i * 37 % 101) / 100.0) for i in range(1200)]
+    scored = spark.createDataFrame(rows, "label int, prediction double, score double").cache()
+    scored.count()
+    sc = spark.sparkContext
+
+    def jobs(name, fn) -> int:
+        group = f"eval-jobs-{name}"
+        sc.setJobGroup(group, "", interruptOnCancel=False)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        assert jobs("wf1", lambda: EV.weighted_f1(scored)) <= 2
+        assert jobs("report", lambda: EV.classification_report(scored).collect()) <= 2
+        assert jobs("ml", lambda: ML._scored_metrics(scored, scored, ML.PipelineConfig())) <= 5
+    finally:
+        scored.unpersist()
+
+
 AUC_ROWS = [  # includes tied scores — the §7.4 parity risk
     (1, 0.9), (0, 0.9), (1, 0.8), (1, 0.7), (0, 0.7), (0, 0.7),
     (1, 0.5), (0, 0.4), (1, 0.3), (0, 0.1),
