@@ -677,67 +677,6 @@ def decontaminate(
     )
 
 
-def semantic_dedup(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 8,
-    threshold: float = 0.95,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """SemDeDup-style cluster-partitioned embedding dedup (Abbas et al.
-    2023, arXiv:2303.09540): partition the corpus by nearest centroid,
-    then drop any document whose cluster holds a lower-id member within
-    cosine ``threshold``.
-
-    ``centroids`` is a (c_id, c_v) frame; by default the ``k`` lowest-id
-    vectors act as deterministic seed centroids (oracle-replayable). At
-    scale, pass centroids trained offline (e.g. MLlib KMeans on a sample)
-    with k ≈ n/10⁴ so cluster sizes stay bounded.
-
-    Plan shape: assignment is a broadcast nested-loop against the k-row
-    centroid frame + one partial-aggregatable ``max_by`` per vector (no
-    window, no sort); the in-cluster self-join shuffles once on the
-    cluster id. Total pair work is Σ|cluster|² — bounded by the centroid
-    count, never global O(n²). Returns surviving (id, cluster) rows.
-    """
-    base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    if centroids is None:
-        centroids = base.orderBy("id").limit(k).select(
-            F.col("id").alias("c_id"), F.col("v").alias("c_v")
-        )
-    # nearest centroid by cosine; ties break to the lowest centroid id via
-    # the struct ordering of max_by's ordinal (cosine asc, -c_id asc)
-    assigned = (
-        base.join(F.broadcast(centroids))
-        .select(
-            "id",
-            "v",
-            F.col("c_id"),
-            V.cosine_similarity("v", "c_v").alias("_cos"),
-        )
-        .groupBy("id")
-        .agg(
-            F.max_by("c_id", F.struct(F.col("_cos"), (-F.col("c_id")))).alias(
-                "cluster"
-            ),
-            F.any_value(F.col("v")).alias("v"),  # constant per id
-        )
-    )
-    l, r = assigned.alias("l"), assigned.alias("r")
-    dups = (
-        l.join(
-            r,
-            (F.col("l.cluster") == F.col("r.cluster"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .filter(V.cosine_similarity(F.col("l.v"), F.col("r.v")) >= threshold)
-        .select(F.col("r.id").alias("id"))
-        .distinct()
-    )
-    return assigned.join(dups, "id", "left_anti").select("id", "cluster")
-
-
 def embedding_near_duplicates(
     emb: DataFrame,
     vec_col: str = "embedding",

@@ -33,19 +33,6 @@ def confusion_matrix(
     )
 
 
-def confusion_matrix_pivot(
-    df: DataFrame, label_col: str = "label", pred_col: str = "prediction"
-) -> DataFrame:
-    """A5 — wide 2×k confusion matrix via pivot (for display parity)."""
-    return (
-        df.groupBy(F.col(label_col).cast("int").alias("label"))
-        .pivot(pred_col)
-        .count()
-        .na.fill(0)
-        .orderBy("label")
-    )
-
-
 def _confusion_rows(df: DataFrame, label_col: str, pred_col: str) -> list[tuple]:
     """The one driver action behind every confusion-based metric: collect
     the ≤k² ``confusion_matrix`` rows as (label, prediction, n), ordered by

@@ -14,8 +14,6 @@ vector is opaque).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -216,11 +214,6 @@ def hashing_tf_indices(
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-
-
-def idf_vector_model_parity(m: int, df: int) -> float:
-    """Scalar IDF formula used by both forms (unit-test helper)."""
-    return math.log((m + 1.0) / (df + 1.0))
 
 
 def chi2_terms(

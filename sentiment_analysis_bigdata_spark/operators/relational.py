@@ -1,12 +1,15 @@
-"""Relational core (SURVEY §2.2-§2.5): filters, projections, joins, windows,
-set ops, grouping sets, sampling, sorts, top-k.
+"""Relational core (SURVEY §2.2-§2.5): CASE WHEN, joins, windows, set ops,
+grouping sets, sampling, sorts, top-k.
 
 The reference exercises only a sliver of this surface (dropna / select /
 withColumn / when / groupBy-count — SURVEY P1-P7, A1-A3) and contains zero
 joins/windows/set-ops (SURVEY §2.5); the engine provides the full family as
 first-class, declaratively-planned operators so Catalyst chooses physical
 strategies (broadcast-hash vs sort-merge, partial aggregation, AQE skew
-handling).
+handling). The reference's P1-P4 steps (``dropna``, ``select``,
+``withColumn``) need no wrapper: callers use the DataFrame calls directly
+(``apps/workflow.clean_tweets``; the ``null_handling`` and
+``case_when_bands`` queries).
 
 Scale notes baked into each operator's contract:
 - ``join``: small dimension sides should be broadcast — pass
@@ -15,7 +18,6 @@ Scale notes baked into each operator's contract:
   (per-partition heaps + driver merge of k rows) — no full sort, no full
   shuffle.
 - ``top_k_per_group``: window + filter, one shuffle on the partition key.
-- ``dropna``/filters: narrow, fuse into the scan stage.
 """
 
 from __future__ import annotations
@@ -26,22 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-# --- projections / filters (P1-P7) ---------------------------------------
-
-def drop_nulls(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """P1 — ``dropna()`` (reference preprocessing.py:38)."""
-    return df.dropna(subset=list(subset) if subset else None)
-
-
-def project(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """P2/P3 — column projection (prunes the scan via Catalyst)."""
-    return df.select(*cols)
-
-
-def derive(df: DataFrame, **named_exprs: Column) -> DataFrame:
-    """P4 — add computed columns in one pass (single projection node)."""
-    return df.withColumns(named_exprs)
-
+# --- CASE WHEN (P5) -------------------------------------------------------
 
 def case_when(pairs: Sequence[tuple[Column, Column]], default: Column) -> Column:
     """P5 — CASE WHEN chain (reference preprocessing.py:93-96)."""

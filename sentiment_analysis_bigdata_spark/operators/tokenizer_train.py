@@ -52,13 +52,6 @@ def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def char_pairs(word: Column | str) -> Column:
-    """Adjacent character pairs of a word: ``substring(word, i, 2)`` for
-    i in 1..len-1 (empty array for words shorter than 2 chars)."""
-    w = F.col(word) if isinstance(word, str) else word
-    return _pairs_expr(w)
-
-
 def _pairs_expr(w: Column) -> Column:
     return F.when(
         F.length(w) >= 2,

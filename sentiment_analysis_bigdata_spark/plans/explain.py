@@ -50,13 +50,3 @@ def num_shuffles(df: DataFrame) -> int:
 
     plan = formatted_plan(df)
     return len(re.findall(r"^\(\d+\) Exchange\b", plan, flags=re.M))
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen subtrees (wider = fewer = better fusion)."""
-    plan = formatted_plan(df)
-    ids = set()
-    for line in plan.splitlines():
-        if "WholeStageCodegen" in line:
-            ids.add(line.strip())
-    return len(ids)

@@ -397,3 +397,32 @@ class TestKmeansSilhouette:
         } == sizes_lloyd
         # well-separated blobs: strongly positive silhouette everywhere
         assert all(r["mean_silhouette"] > 0.5 for r in sil.collect())
+
+
+def test_iter_cluster_blocks_matches_groupby():
+    """Clusters spanning 1, 2 and 6 batches, empty batches between them
+    and a final single-row cluster come out as exactly the per-cluster
+    groups, in order, positionally equal to ``groupby`` (pandas only)."""
+    import pandas as pd
+
+    from sentiment_analysis_bigdata_spark.operators.clustering import _iter_cluster_blocks
+
+    sizes = {0: 3, 1: 1, 2: 7, 3: 25, 4: 2, 5: 1}
+    cids = [c for c, n in sizes.items() for _ in range(n)]
+    full = pd.DataFrame(
+        {"cluster_id": cids, "id": range(len(cids)), "v": [[float(i)] for i in range(len(cids))]}
+    )
+    empty = full.iloc[:0]
+    cuts = [0, 4, 8, 14, 18, 22, 26, 30, 38, 39]
+    batches = []
+    for lo, hi in zip(cuts, cuts[1:]):
+        batches += [full.iloc[lo:hi].reset_index(drop=True), empty]
+    spans = {c: sum(c in set(b["cluster_id"]) for b in batches) for c in sizes}
+    assert spans == {0: 1, 1: 1, 2: 2, 3: 6, 4: 1, 5: 1}
+
+    blocks = list(_iter_cluster_blocks(iter([empty] + batches)))
+    groups = [g for _, g in full.groupby("cluster_id", sort=False)]
+    assert [b["cluster_id"].iat[0] for b in blocks] == list(sizes)
+    assert len(blocks) == len(groups)
+    for b, g in zip(blocks, groups):
+        pd.testing.assert_frame_equal(b.reset_index(drop=True), g.reset_index(drop=True))

@@ -25,13 +25,6 @@ def test_confusion_matrix_counts(preds):
     assert cm == {(1, 1): 7, (1, 0): 3, (0, 0): 6, (0, 1): 4}
 
 
-def test_confusion_matrix_pivot(preds):
-    rows = EV.confusion_matrix_pivot(preds).collect()
-    assert [r["label"] for r in rows] == [0, 1]
-    assert rows[0]["0"] == 6 and rows[0]["1"] == 4
-    assert rows[1]["0"] == 3 and rows[1]["1"] == 7
-
-
 def test_accuracy(preds):
     assert EV.accuracy(preds) == pytest.approx(13 / 20)
 
