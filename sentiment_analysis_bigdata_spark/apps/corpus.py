@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from sentiment_analysis_bigdata_spark.functions import text as TXT
 from sentiment_analysis_bigdata_spark.operators import dedup as DD
+from sentiment_analysis_bigdata_spark.plans.barrier import barrier_lazy
 from sentiment_analysis_bigdata_spark.sources import write_parquet
 
 
@@ -67,12 +68,13 @@ def clean_corpus(
     ann = annotate_corpus(df, text_col).cache()
     bp = None
     try:
-        total = ann.count()
-        kept = ann.filter(
-            (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
-        )
+        keep = (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
         if langs:
-            kept = kept.filter(F.col("lang_guess").isin(list(langs)))
+            keep = keep & F.col("lang_guess").isin(list(langs))
+        # one action fills the cache and counts both sides of the filter
+        # (the boilerplate rewrite below keeps every row)
+        total, n_kept = ann.agg(F.count(F.lit(1)), F.count_if(keep)).first()
+        kept = ann.filter(keep)
         segments_dropped = 0
         if boilerplate_pct is not None:
             from sentiment_analysis_bigdata_spark.operators.dedup import (
@@ -93,7 +95,6 @@ def clean_corpus(
                 bp.drop(text_col, "n_segments", "n_kept")
                 .withColumnRenamed(f"{text_col}_deduped", text_col)
             )
-        n_kept = kept.count()
         write_parquet(kept, output_path)
     finally:
         ann.unpersist()
@@ -159,10 +160,17 @@ def cluster_dedup_corpus(
     """Transitively-correct near-dedup: pairwise removal (``dedup_corpus``)
     keeps c when a≈b and b≈c but a̸≈c; here the near-dup pair graph is
     closed into connected components and only each cluster's minimum id
-    survives — one survivor per cluster regardless of chain depth."""
+    survives — one survivor per cluster regardless of chain depth.
+
+    Each intermediate is computed once: the exact-dedup survivors sit
+    behind one barrier (its count is ``n_exact``) that both the near-dup
+    pairs and the final anti-join read, and ``rows_out`` is ``n_exact``
+    minus the losers — every loser is a pair-graph node, so an exact
+    survivor — instead of a second evaluation of the survivor frame."""
     df = spark.read.parquet(input_path)
     total = df.count()
-    exact = DD.exact_dedup(df, text_col, id_col)
+    exact = DD.exact_dedup(df, text_col, id_col).transform(barrier_lazy)
+    n_exact = exact.count()
     if method == "minhash":
         pairs = DD.minhash_near_duplicates(exact, text_col, id_col, threshold=threshold)
     elif method == "simhash":
@@ -174,9 +182,8 @@ def cluster_dedup_corpus(
         comp.filter(F.col("node") != F.col("component"))
         .select(F.col("node").alias(id_col))
     )
-    survivors = exact.join(losers, id_col, "left_anti")
-    n_out = survivors.count()
-    write_parquet(survivors, output_path)
+    n_out = n_exact - losers.count()
+    write_parquet(exact.join(losers, id_col, "left_anti"), output_path)
     return {
         "rows_in": total,
         "rows_out": n_out,

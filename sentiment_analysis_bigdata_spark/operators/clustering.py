@@ -69,6 +69,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sentiment_analysis_bigdata_spark.sources import local_frame
+
 # Above this k the assign step switches from k inline literal folds to a
 # broadcast centroid row: plan size/parse time grow with k on the
 # literal path while the broadcast path is O(1) in plan size.
@@ -119,8 +121,8 @@ def _assign_broadcast(base: DataFrame, centers: list[list[float]]) -> DataFrame:
     zip_with/aggregate fold, so assignments are bit-identical to the
     literal path."""
     one = (
-        base.sparkSession.createDataFrame(
-            list(enumerate(centers)), "cid int, c array<double>"
+        local_frame(
+            base.sparkSession, [range(len(centers)), centers], "cid int, c array<double>"
         )
         .select(F.struct(F.col("cid"), F.col("c")).alias("s"))
         .groupBy()

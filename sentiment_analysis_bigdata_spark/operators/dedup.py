@@ -7,8 +7,8 @@ side stays distributed:
 
 - exact dedup: hash-groupBy on a fingerprint — one shuffle, no sort.
 - MinHash-LSH: signature (narrow) → band explode (narrow) → bucket
-  self-join (shuffle on band hash) → pair verify. Candidate pairs only —
-  never O(n²).
+  group-by (shuffle on band hash) → in-bucket pairs → pair verify.
+  Candidate pairs only — never O(n²).
 - SimHash: 64-bit signature + banded buckets for Hamming-radius search.
 - embedding near-dup: sign-LSH buckets → in-bucket cosine.
 
@@ -20,11 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sentiment_analysis_bigdata_spark.functions import hashing as H
 from sentiment_analysis_bigdata_spark.functions import text as TXT
 from sentiment_analysis_bigdata_spark.functions import vector as V
 from sentiment_analysis_bigdata_spark.plans.barrier import barrier_eager, barrier_lazy
+from sentiment_analysis_bigdata_spark.sources import local_frame
 
 
 def exact_dedup(
@@ -206,33 +208,38 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """Distinct candidate (a, b) pairs (a < b) sharing ≥1 LSH band bucket.
 
-    The self-join shuffles on (band, band_key) — bucket-local, never O(n²).
-    Hot buckets (boilerplate docs) are the skew risk at 100 TB; AQE skew
-    join handles moderate cases. ``max_bucket`` (off by default — dropping
-    data silently is a policy decision) caps degenerate buckets: buckets
-    with more members are excluded from candidate generation, the standard
-    production guard against quadratic blowup on boilerplate.
+    The band rows group on (band, band_key) — one shuffle, bucket-local,
+    never O(n²). Each bucket's sorted member set expands to its (a < b)
+    pairs, then ``distinct`` folds pairs that share several bands. The
+    band frame is consumed once, so the MinHash Arrow kernel runs once
+    per evaluation (a self-join reads it twice, and at small scale AQE
+    broadcasts one side, running the kernel once per side). Hot buckets
+    (boilerplate docs) are the skew risk at 100 TB: a bucket's member set
+    is one row and its pair count is quadratic in its size.
+    ``max_bucket`` (off by default — dropping data silently is a policy
+    decision) excludes buckets with more members from candidate
+    generation, the standard production guard against quadratic blowup
+    on boilerplate.
     """
-    b = minhash_bands(df, tokens_col, id_col, num_hashes, bands)
-    if max_bucket is not None:
-        sizes = b.groupBy("band", "band_key").agg(F.count(F.lit(1)).alias("__bn"))
-        b = (
-            b.join(sizes, ["band", "band_key"])
-            .filter(F.col("__bn") <= max_bucket)
-            .drop("__bn")
-        )
-    left = b.alias("l")
-    right = b.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
+    buckets = (
+        minhash_bands(df, tokens_col, id_col, num_hashes, bands)
+        .groupBy("band", "band_key")
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
     )
+    ids = F.col("ids")
+    keep = F.size(ids) >= 2
+    if max_bucket is not None:
+        keep = keep & (F.size(ids) <= max_bucket)
+    pairs = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+    return buckets.filter(keep).select(F.inline(pairs)).distinct()
 
 
 def jaccard_similarity(a_tokens: Column, b_tokens: Column) -> Column:
@@ -463,6 +470,80 @@ def ngram_jaccard_pairs(
     )
 
 
+# Pair graphs with at most this many directed edges close on the driver
+# (numpy rounds over the collected edge list, 16 bytes per edge); larger
+# graphs keep the distributed join + aggregate round.
+LOCAL_COMPONENTS_MAX_EDGES = 1 << 20
+
+
+def _spark_label_round(edges: DataFrame):
+    """Min-label round over the distributed edge list: one join + one
+    aggregation, materialized by an eager barrier, plus the label-sum
+    action. Round 1 (``labels`` None) reads the edge list alone."""
+
+    def step(labels):
+        if labels is None:
+            nxt = (
+                edges.groupBy("src")
+                .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+                .withColumnRenamed("src", "node")
+            )
+        else:
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.node)
+                .groupBy("src")
+                .agg(F.min("label").alias("nbr_label"))
+                .withColumnRenamed("src", "node")
+            )
+            nxt = labels.join(neighbor_min, "node", "left").select(
+                "node",
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+                ).alias("label"),
+            )
+        nxt = nxt.transform(barrier_eager)
+        return nxt, nxt.agg(F.sum("label")).first()[0]
+
+    def result(labels):
+        if labels is None:
+            return edges.select(
+                F.col("src").alias("node"), F.col("src").alias("component")
+            ).distinct()
+        return labels.select("node", F.col("label").alias("component"))
+
+    return step, result
+
+
+def _local_label_round(spark, table, id_type):
+    """The same min-label round over a collected edge list (a pyarrow
+    table of ``src``/``dst``): ``np.minimum.at`` scatters each edge's
+    neighbor label, so round r yields exactly the labels of the Spark
+    round r. The result is an Arrow local relation of the edge id type."""
+    import numpy as np
+
+    src = table.column("src").to_numpy()
+    nodes, si = np.unique(src, return_inverse=True)
+    di = np.searchsorted(nodes, table.column("dst").to_numpy())
+
+    def step(labels):
+        cur = nodes if labels is None else labels
+        nxt = cur.copy()
+        np.minimum.at(nxt, si, cur[di])
+        # SQL sum semantics: an empty label set sums to NULL
+        return nxt, (int(nxt.sum()) if len(nxt) else None)
+
+    def result(labels):
+        return local_frame(
+            spark,
+            [nodes, nodes if labels is None else labels],
+            T.StructType(
+                [T.StructField("node", id_type), T.StructField("component", id_type)]
+            ),
+        )
+
+    return step, result
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "a",
@@ -484,17 +565,28 @@ def connected_components(
     Near-dup pairs are edges; transitive closure groups a→b, b→c into one
     cluster (pairwise dedup alone would keep c). Algorithm: iterative
     min-label propagation — each round every node adopts the smallest label
-    among itself and its neighbors; converges in O(diameter) rounds, each
-    one join + one aggregation.
+    among itself and its neighbors; converges in O(diameter) rounds.
+    Round 1 reads the edge list alone (``least(src, min(dst))``), so no
+    identity-label pass runs. Convergence is detected by the label sum:
+    min-propagation is monotone non-increasing per node, so a round with
+    an unchanged sum is a fixed point — one cheap aggregation instead of
+    a change-detection join.
 
-    Each round materializes labels via ``localCheckpoint`` — without it the
-    logical plan doubles per iteration and Catalyst analysis time explodes
-    (an unbounded iterative join loop is the classic Spark footgun). On a
-    real cluster, swap for ``df.checkpoint()`` against reliable storage so
-    executor loss can't lose label state. Convergence is detected by the
-    label sum: min-propagation is monotone non-increasing per node, so a
-    round with an unchanged sum is a fixed point — one cheap aggregation
-    instead of a change-detection join.
+    One round loop, two round steps. The symmetric edge list is
+    materialized once behind an eager barrier; an integral edge list of
+    at most ``LOCAL_COMPONENTS_MAX_EDGES`` directed edges is then
+    collected (one bounded ``limit`` probe) and every round is a numpy
+    scatter-min on the driver, returned as an Arrow local relation —
+    a small pair graph pays no per-round join, barrier or sum job.
+    Larger graphs (a 100 TB pair graph does not fit on the driver) keep
+    the distributed step: one join + one aggregation per round, each
+    round's labels materialized via ``localCheckpoint`` — without it the
+    logical plan doubles per iteration and Catalyst analysis time
+    explodes (an unbounded iterative join loop is the classic Spark
+    footgun). On a real cluster, swap for ``df.checkpoint()`` against
+    reliable storage so executor loss can't lose label state. Both steps
+    run the same rounds, so labels, the non-convergence error and the
+    partial labels under ``require_convergence=False`` are identical.
     """
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -502,37 +594,27 @@ def connected_components(
         .distinct()
         .transform(barrier_eager)
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .transform(barrier_eager)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    converged = False
+    id_type = edges.schema["src"].dataType
+    probe = None
+    if isinstance(id_type, T.IntegralType):
+        probe = edges.limit(LOCAL_COMPONENTS_MAX_EDGES + 1).toArrow()
+    if (
+        probe is not None
+        and probe.num_rows <= LOCAL_COMPONENTS_MAX_EDGES
+        and probe.column("src").null_count == 0
+    ):
+        step, result = _local_label_round(pairs.sparkSession, probe, id_type)
+    else:
+        step, result = _spark_label_round(edges)
+    labels, prev_sum = None, None
     for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed("src", "node")
-        )
-        labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .transform(barrier_eager)
-        )
-        new_sum = labels.agg(F.sum("label")).first()[0]
+        labels, new_sum = step(labels)
+        # prev_sum starts as NULL: round 1 of a non-empty graph never
+        # matches it, and an empty graph (sum NULL) converges at once
         if new_sum == prev_sum:
-            converged = True
-            break
+            return result(labels)
         prev_sum = new_sum
-    if require_convergence and not converged:
+    if require_convergence:
         # One more fixed-point probe would cost a full round; callers with
         # an EXACT contract (oracle-replayed reachability) must not return
         # silently-partial labels when the graph diameter exceeds the
@@ -543,7 +625,7 @@ def connected_components(
             "connected_components_star (O(log n) rounds) for deep graphs, "
             "or raise max_iterations"
         )
-    return labels.select("node", F.col("label").alias("component"))
+    return result(labels)
 
 
 def dedup_segments(

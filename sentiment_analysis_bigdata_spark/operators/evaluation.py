@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from sentiment_analysis_bigdata_spark.plans.barrier import barrier_eager
+from sentiment_analysis_bigdata_spark.sources import local_frame
 
 
 def confusion_matrix(
@@ -108,11 +109,9 @@ def classification_report(
     as an Arrow table, which Spark keeps as a local relation: collecting
     the report runs no further job.
     """
-    import pyarrow as pa
-
     rows = _per_class(_confusion_rows(df, label_col, pred_col))
-    table = pa.table({c: [r[i] for r in rows] for i, c in enumerate(_REPORT_COLUMNS)})
-    return df.sparkSession.createDataFrame(table, _REPORT_SCHEMA)
+    columns = [[r[i] for r in rows] for i in range(len(_REPORT_COLUMNS))]
+    return local_frame(df.sparkSession, columns, _REPORT_SCHEMA)
 
 
 def weighted_f1(df: DataFrame, label_col: str = "label", pred_col: str = "prediction") -> float:

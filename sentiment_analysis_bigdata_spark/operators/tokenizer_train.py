@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sentiment_analysis_bigdata_spark.functions.text import tokenize_nonempty
-from sentiment_analysis_bigdata_spark.plans.barrier import barrier_eager
+from sentiment_analysis_bigdata_spark.plans.barrier import barrier_eager, barrier_lazy
 
 
 def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -235,7 +235,8 @@ def train_bpe(
             seg = F.replace(
                 seg, F.lit(f" {lhs}  {rhs} "), F.lit(f" {lhs}{rhs} ")
             )
-        vocab = vocab.withColumn("seg", seg).transform(barrier_eager)
+        # lazy: the next round's pair count materializes it (no job of its own)
+        vocab = vocab.withColumn("seg", seg).transform(barrier_lazy)
     if stats is not None:
         stats["rounds"] = rounds
     return merges, vocab

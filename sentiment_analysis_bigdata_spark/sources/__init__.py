@@ -2,6 +2,7 @@ from sentiment_analysis_bigdata_spark.sources.catalog import (
     ensure_min_parallelism,
     load_table,
     load_tables,
+    local_frame,
     read_csv,
     read_json,
     read_orc,
@@ -15,6 +16,7 @@ __all__ = [
     "ensure_min_parallelism",
     "load_table",
     "load_tables",
+    "local_frame",
     "read_csv",
     "read_json",
     "read_orc",

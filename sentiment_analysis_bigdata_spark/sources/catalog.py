@@ -9,6 +9,8 @@ headerless Sentiment140 CSV from HDFS, reference preprocessing.py:31-35).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -79,6 +81,29 @@ def ensure_min_parallelism(df: DataFrame, n: int, key: str | None = None) -> Dat
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, key) if key else df.repartition(n)
+
+
+def local_frame(
+    spark: SparkSession, columns: Sequence, schema: str | T.StructType
+) -> DataFrame:
+    """Driver-held values as a local relation: one value sequence per
+    field of ``schema`` (DDL string or StructType; lists or numpy arrays)
+    becomes one Arrow table typed from that schema, which Spark keeps as a
+    ``LocalTableScan`` — actions on it run no job. ``createDataFrame`` on
+    a Python list instead goes through a pickled Python RDD, and every
+    action on such a frame runs a job of ``defaultParallelism``
+    Python-worker tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    if len(columns) != len(arrow):
+        raise ValueError(f"{len(columns)} columns for a {len(arrow)}-field schema")
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

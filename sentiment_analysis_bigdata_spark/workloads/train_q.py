@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from sentiment_analysis_bigdata_spark.operators import layout, regression, tokenizer_train
 from sentiment_analysis_bigdata_spark.plans.barrier import barrier_lazy
-from sentiment_analysis_bigdata_spark.sources import load_table
+from sentiment_analysis_bigdata_spark.sources import load_table, local_frame
 
 
 # --- BPE merge candidates (tokenizer training, one round) ------------------------
@@ -38,8 +38,9 @@ def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     SQL CTEs, independently deriving every merge."""
     docs = load_table(spark, sf, "documents")
     merges, _ = tokenizer_train.train_bpe(docs, n_merges=3)
-    return spark.createDataFrame(
-        [(r, l, rh, m, int(n)) for r, l, rh, m, n in merges],
+    return local_frame(
+        spark,
+        [[m[i] for m in merges] for i in range(5)],
         "rank int, lhs string, rhs string, merged string, n bigint",
     )
 

@@ -157,3 +157,26 @@ def test_mix_corpus(spark, tmp_path):
     b = sorted(map(tuple, spark.read.parquet(out2)
                    .select("doc_id", "split", "shard", "ordinal").collect()))
     assert a == b
+
+
+def test_cluster_dedup_corpus_jobs_per_call(spark, corpus_parquet, tmp_path):
+    """Each intermediate of one cluster-dedup call is computed once: the
+    exact survivors sit behind one barrier read by the pairs and the
+    final anti-join, the MinHash kernel runs once, and the small pair
+    graph closes on the driver. Pinned at the measured job count + 1;
+    re-running exact dedup or a per-round component barrier exceeds it
+    (18 on this fixture; the former bucket self-join with per-round
+    component barriers ran 41)."""
+    sc = spark.sparkContext
+    group = "cluster-dedup-jobs"
+    sc.setJobGroup(group, "", interruptOnCancel=False)
+    try:
+        stats = corpus.cluster_dedup_corpus(
+            spark, corpus_parquet, str(tmp_path / "cdedup"), method="minhash",
+            threshold=0.6,
+        )
+    finally:
+        sc.setJobGroup("", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert stats["rows_out"] == 4
+    assert jobs <= 19, jobs

@@ -98,6 +98,46 @@ def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
     assert capped.count() == 0
 
 
+@pytest.mark.parametrize("max_bucket", [None, 2, 3])
+def test_minhash_grouped_candidates_match_python_buckets(spark, max_bucket):
+    """Candidates come from grouping the band rows on (band, band_key);
+    the pair set must equal a pure-Python bucket → (a < b) pairs
+    expansion of the same band rows, with and without the bucket cap."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    base = ["alpha beta gamma delta epsilon zeta eta theta",
+            "one two three four five six seven eight",
+            "red green blue cyan magenta yellow black white"]
+    rows = []
+    for i in range(30):
+        words = base[i % 3].split()
+        # a shared prefix per family, a per-doc tail of varying length
+        rows.append((i, words[: 4 + i % 5] + [f"w{i}"] * (i % 2)))
+    df = spark.createDataFrame(rows, "doc_id long, toks array<string>")
+
+    buckets = defaultdict(set)
+    for r in DD.minhash_bands(df, F.col("toks"), "doc_id", 8, 4).collect():
+        buckets[(r["band"], r["band_key"])].add(r["doc_id"])
+    sizes = sorted(len(m) for m in buckets.values())
+    assert sizes[0] == 1 and sizes[-1] > 3  # singletons and capped buckets
+    want = {
+        pair
+        for members in buckets.values()
+        if max_bucket is None or len(members) <= max_bucket
+        for pair in combinations(sorted(members), 2)
+    }
+    got = [
+        (r["a"], r["b"])
+        for r in DD.minhash_candidate_pairs(
+            df, F.col("toks"), "doc_id", 8, 4, max_bucket=max_bucket
+        ).collect()
+    ]
+    assert len(got) == len(set(got))  # distinct
+    assert set(got) == want
+    assert want  # the reference is not vacuous
+
+
 def test_jaccard_values(spark):
     df = spark.createDataFrame(
         [(["a", "b", "c"], ["b", "c", "d"])], "x array<string>, y array<string>"

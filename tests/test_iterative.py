@@ -46,6 +46,64 @@ class TestConnectedComponents:
         assert 3 not in labels  # isolated nodes don't appear in the edge set
 
 
+class TestConnectedComponentsTwoSteps:
+    """The driver-side numpy round and the distributed join + aggregate
+    round run the same min-label rounds: equal labels (and id types) on
+    every graph, or the same error. ``LOCAL_COMPONENTS_MAX_EDGES = 0``
+    forces the distributed step."""
+
+    def _both(self, spark, monkeypatch, edges, schema="a long, b long", **kw):
+        df = spark.createDataFrame(edges, schema)
+
+        def run():
+            try:
+                out = DD.connected_components(df, **kw)
+            except RuntimeError as exc:
+                return ("raised", str(exc)), None
+            return sorted(tuple(r) for r in out.collect()), out.schema
+
+        local = run()
+        with monkeypatch.context() as m:
+            m.setattr(DD, "LOCAL_COMPONENTS_MAX_EDGES", 0)
+            distributed = run()
+        return local, distributed
+
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_random_graphs(self, spark, monkeypatch, seed):
+        rng = random.Random(seed)
+        edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(45)]
+        edges = [(a, b) for a, b in edges if a != b]
+        schema = "a long, b long" if seed != 2 else "a int, b int"
+        (labels, s_local), (want, s_dist) = self._both(
+            spark, monkeypatch, edges, schema
+        )
+        assert labels == want
+        assert [f.dataType for f in s_local] == [f.dataType for f in s_dist]
+        nodes = {n for e in edges for n in e}
+        assert {n for n, _ in labels} == nodes
+
+    @pytest.mark.parametrize("budget", [5, 20, 31])
+    @pytest.mark.parametrize("require", [True, False])
+    def test_chain_budgets(self, spark, monkeypatch, budget, require):
+        """The 30-edge chain needs 30 rounds plus one fixed-point round:
+        budgets 5 and 20 raise (or return the same partial labels), 31
+        converges on both steps."""
+        edges = [(i, i + 1) for i in range(30)]
+        local, distributed = self._both(
+            spark, monkeypatch, edges,
+            max_iterations=budget, require_convergence=require,
+        )
+        assert local[0] == distributed[0]
+        if budget == 31:
+            assert {c for _, c in local[0]} == {0}
+        elif require:
+            assert local[0][0] == "raised"
+            assert "did not converge in" in local[0][1]
+        else:
+            assert len(local[0]) == 31
+            assert max(c for _, c in local[0]) > 0  # partial labels
+
+
 class TestHistogramAuc:
     def test_close_to_exact(self, spark):
         rng = random.Random(7)

@@ -190,8 +190,11 @@ AUDIT = {
     ),
     "minhash_near_dups": (
         ["SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin", "!BroadcastNestedLoopJoin"],
-        "LSH banding: candidate pairs come from an EQUI join on (band, "
-        "band_key) — never a nested-loop/cartesian pair scan",
+        "LSH banding: candidates come from grouping the band rows on "
+        "(band, band_key) — each bucket's sorted member set expands to its "
+        "(a < b) pairs, so the MinHash kernel runs once; the Jaccard "
+        "verify joins are EQUI joins on the pair ids — never a "
+        "nested-loop/cartesian pair scan",
     ),
     "simhash_near_dups": (
         ["SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin", "!BroadcastNestedLoopJoin"],
@@ -517,8 +520,9 @@ AUDIT = {
         "STAR edges (doc → the window's min doc) — one edge per "
         "(window, doc), never O(df²) pairs, exactly "
         "connectivity-preserving; bounded-round min-label propagation "
-        "runs on checkpointed edges so the audited plan is the final "
-        "labeled join, not an unbounded lineage",
+        "runs on checkpointed edges (a small edge list closes on the "
+        "driver into a local label relation) so the audited plan is the "
+        "final labeled join, not an unbounded lineage",
     ),
     "salted_distinct_users": (
         ["HashAggregate", "__salt", "!CartesianProduct"],
