@@ -165,8 +165,10 @@ def cluster_dedup_corpus(
     Each intermediate is computed once: the exact-dedup survivors sit
     behind one barrier (its count is ``n_exact``) that both the near-dup
     pairs and the final anti-join read, and ``rows_out`` is ``n_exact``
-    minus the losers — every loser is a pair-graph node, so an exact
-    survivor — instead of a second evaluation of the survivor frame."""
+    minus the exact rows whose id is a loser (the semi-join complement
+    of the written anti-join, so a row repeated under one id counts as
+    often as it is dropped) instead of a second evaluation of the
+    survivor frame."""
     df = spark.read.parquet(input_path)
     total = df.count()
     exact = DD.exact_dedup(df, text_col, id_col).transform(barrier_lazy)
@@ -182,7 +184,7 @@ def cluster_dedup_corpus(
         comp.filter(F.col("node") != F.col("component"))
         .select(F.col("node").alias(id_col))
     )
-    n_out = n_exact - losers.count()
+    n_out = n_exact - exact.join(losers, id_col, "left_semi").count()
     write_parquet(exact.join(losers, id_col, "left_anti"), output_path)
     return {
         "rows_in": total,

@@ -165,8 +165,9 @@ def test_cluster_dedup_corpus_jobs_per_call(spark, corpus_parquet, tmp_path):
     final anti-join, the MinHash kernel runs once, and the small pair
     graph closes on the driver. Pinned at the measured job count + 1;
     re-running exact dedup or a per-round component barrier exceeds it
-    (18 on this fixture; the former bucket self-join with per-round
-    component barriers ran 41)."""
+    (19 on this fixture, one of them the semi-join count of written rows;
+    the former bucket self-join with per-round component barriers ran
+    41)."""
     sc = spark.sparkContext
     group = "cluster-dedup-jobs"
     sc.setJobGroup(group, "", interruptOnCancel=False)
@@ -179,4 +180,20 @@ def test_cluster_dedup_corpus_jobs_per_call(spark, corpus_parquet, tmp_path):
         sc.setJobGroup("", "")
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert stats["rows_out"] == 4
-    assert jobs <= 19, jobs
+    assert jobs <= 20, jobs
+
+
+def test_cluster_dedup_corpus_repeated_loser_row(spark, corpus_parquet, tmp_path):
+    """A row repeated under one doc_id (a re-ingested page) survives exact
+    dedup twice; when that id is a near-dup loser the anti-join drops
+    both copies, and ``rows_out`` must count what was written."""
+    df = spark.read.parquet(corpus_parquet)
+    src = str(tmp_path / "repeated.parquet")
+    df.unionByName(df.filter("doc_id = 3")).write.parquet(src)
+    out = str(tmp_path / "cdedup")
+    stats = corpus.cluster_dedup_corpus(spark, src, out, method="minhash", threshold=0.6)
+    written = spark.read.parquet(out)
+    assert sorted(r["doc_id"] for r in written.select("doc_id").collect()) == [0, 4, 5, 6]
+    assert stats["rows_in"] == 8
+    assert stats["rows_out"] == written.count() == 4
+    assert stats["removed"] == 4

@@ -138,6 +138,23 @@ def test_minhash_grouped_candidates_match_python_buckets(spark, max_bucket):
     assert want  # the reference is not vacuous
 
 
+def test_minhash_candidates_stream_hot_bucket(spark):
+    """A hot bucket (boilerplate copies) expands one member at a time: the
+    plan builds no nested pair array for ``flatten`` (one array of a
+    bucket's n(n-1)/2 pairs needs GBs per row and passes Spark's array
+    size limit at 65,537 members), and every pair still comes out once."""
+    n = 300
+    df = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.array(*[F.lit(w) for w in "same boilerplate footer text".split()]).alias("toks"),
+    )
+    cands = DD.minhash_candidate_pairs(df, F.col("toks"), "doc_id", 8, 4)
+    plan = cands._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert "flatten" not in plan
+    assert cands.count() == n * (n - 1) // 2
+    assert cands.filter(F.col("a") >= F.col("b")).count() == 0
+
+
 def test_jaccard_values(spark):
     df = spark.createDataFrame(
         [(["a", "b", "c"], ["b", "c", "d"])], "x array<string>, y array<string>"
