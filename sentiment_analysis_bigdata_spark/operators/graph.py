@@ -1,23 +1,44 @@
-"""Link-analysis operators: weighted PageRank over an edge list — the
-standard importance ranking for crawl prioritization and source scoring in
-a training-data pipeline (rank domains by who links to them, crawl the
-high-rank tail first).
+"""Graph operators over Spark edge lists: twelve link-analysis, path,
+community and cohesion primitives of a training-data pipeline (crawl
+prioritization, source expansion, co-purchase communities, the
+mutually-near-duplicate cliques a pairwise threshold misses).
 
-Spark-first iterative design, like ``dedup.connected_components``:
+- Diffusion over directed, weighted edges: :func:`pagerank`,
+  :func:`personalized_pagerank` (seed teleport, sparse rank frame) and
+  :func:`hits` (hubs and authorities).
+- Paths over undirected edges: :func:`bfs_hops` (frontier BFS from a seed
+  set), :func:`sssp_weighted` (bounded Bellman-Ford, relaxations in
+  unrolled pairs), :func:`neighborhood_function` (exact per-hop pair
+  counts) and :func:`neighborhood_hll` (its HyperBall sketch twin).
+- Communities and cohesion: :func:`label_propagation`, :func:`kcore_peel`,
+  :func:`triangle_count`, :func:`clustering_coefficients` and
+  :func:`link_prediction_scores`.
 
-- Edges normalize once (per-source out-weight) and are reused every
-  iteration; ranks are a small (nodes, rank) frame.
-- Each iteration is one join + one aggregation, both hash-partitioned on
-  the SAME key (dst of the join = key of the agg), so AQE reuses the
-  exchange; no sort anywhere.
-- Fixed iteration count (caller-set) keeps the lineage bounded; for long
-  runs ``localCheckpoint`` every few rounds would cap plan growth (see
-  connected_components for the pattern) — at the typical 10-20 PageRank
-  iterations the plan stays manageable without it.
-- Dangling nodes (no out-edges) keep the base rank ``1 - damping``; the
-  classic per-node formulation ``r = (1-d) + d·Σ contrib`` (Page et al.,
-  1999) rather than the probability-normalized variant, so ranks don't
-  need a global normalization step each round.
+Every operator is built from a few shared blocks, so one edge frame has
+one derivation:
+
+- ``_weighted_shares``: parallel edges collapse to summed weights, each
+  divided by its source's out-weight, plus the node set; both PageRank
+  variants read it every round, and ``_gather`` is their per-destination
+  incoming sum (one join + one aggregation on the same key, so AQE reuses
+  the exchange; no sort anywhere).
+- ``_symmetric``: both orientations of an undirected edge list, one row
+  per ordered pair, materialized once by an eager barrier; ``_canonical``: one ``a < b`` row per undirected edge,
+  self-loops dropped.
+- ``_degrees`` over an ``a``/``b`` edge frame, and ``_wedge_triangles``:
+  ordered wedges (x,y)+(y,z) closed by edge (x,z), so every triangle
+  x < y < z is built exactly once.
+- ``_bfs_layers``: the frontier loop of node-level BFS and pair-level ANF;
+  each hop joins the frontier to the edge list, drops visited keys with
+  one anti join, and stops early on an empty frontier.
+
+Iterative operators cap plan growth with ``plans.barrier`` (a
+``localCheckpoint`` per round, or a reliable checkpoint when
+``SPARK_GRAFT_CHECKPOINT_DIR`` is set); the PageRank loops run a fixed,
+caller-set number of rounds over lazily barriered inputs. PageRank uses
+the classic per-node form ``r = (1-d) + d·Σ contrib`` (Page et al. 1999):
+dangling nodes keep the base rank ``1 - d`` and no round needs a global
+normalization.
 """
 
 from __future__ import annotations
@@ -25,6 +46,135 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from sentiment_analysis_bigdata_spark.plans.barrier import barrier_eager, barrier_lazy
+
+
+def _weighted_shares(
+    edges: DataFrame, src_col: str, dst_col: str, weight_col: str | Column | None
+) -> tuple[DataFrame, DataFrame]:
+    """``(norm, nodes)``: per distinct (src, dst) its share of the source's
+    total out-weight as (_src, _dst, _share), and the (node) set. Parallel
+    edges collapse once, behind a lazy barrier: norm and nodes both derive
+    from the collapsed frame, and without it the (possibly expensive) raw
+    edge derivation executes once per derived frame. norm and nodes are
+    barriered too, as every round's join reuses them."""
+    w = (
+        F.lit(1.0)
+        if weight_col is None
+        else (F.col(weight_col) if isinstance(weight_col, str) else weight_col)
+    )
+    e = edges.select(
+        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"), w.alias("_w")
+    )
+    agg_e = e.groupBy("_src", "_dst").agg(F.sum("_w").alias("_w")).transform(
+        barrier_lazy
+    )
+    out_w = agg_e.groupBy("_src").agg(F.sum("_w").alias("_out_w"))
+    norm = agg_e.join(out_w, "_src").select(
+        "_src", "_dst", (F.col("_w") / F.col("_out_w")).alias("_share")
+    ).transform(barrier_lazy)
+    # agg_e keeps the distinct (src, dst) pairs of e, so its node set is
+    # the raw edge list's
+    return norm, _endpoints(agg_e).transform(barrier_lazy)
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """The distinct (node) set of an (_src, _dst) edge frame."""
+    return (
+        e.select(F.col("_src").alias("node"))
+        .unionByName(e.select(F.col("_dst").alias("node")))
+        .distinct()
+    )
+
+
+def _gather(norm: DataFrame, ranks: DataFrame) -> DataFrame:
+    """One PageRank round's incoming mass: (node, _in) = Σ rank(src) ·
+    share over the in-edges of every node a ranked source reaches."""
+    contrib = norm.join(
+        ranks, norm._src == ranks.node
+    ).select("_dst", (F.col("rank") * F.col("_share")).alias("_c"))
+    return contrib.groupBy(F.col("_dst").alias("node")).agg(
+        F.sum("_c").alias("_in")
+    )
+
+
+def _symmetric(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Both orientations of an undirected edge list as (s, d), one row per
+    ordered pair, materialized once so no round re-runs the upstream edge
+    derivation."""
+    fwd = edges.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
+    return (
+        fwd.unionByName(edges.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
+        .distinct()
+        .transform(barrier_eager)
+    )
+
+
+def _canonical(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """One (a, b) row with a < b per undirected edge, self-loops dropped.
+    Canonicalizes BEFORE distinct: a list carrying both orientations would
+    otherwise count every edge twice."""
+    return (
+        edges.select(
+            F.least(F.col(a_col), F.col(b_col)).alias("a"),
+            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, degree) of an undirected (a, b) edge frame, one row per edge."""
+    return (
+        e.select(F.col("a").alias("node"))
+        .unionAll(e.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+
+
+def _wedge_triangles(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(wedges, triangles)`` of a canonical a < b edge frame: ordered
+    wedges (y, x, z) from (x,y)+(y,z), and the ones edge (x,z) closes —
+    each triangle x < y < z exactly once, from two equi joins."""
+    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
+    wedges = e1.join(e2, "y")
+    closed = wedges.join(
+        e.select(F.col("a").alias("x"), F.col("b").alias("z")),
+        ["x", "z"],
+        "left_semi",
+    )
+    return wedges, closed
+
+
+def _bfs_layers(
+    e: DataFrame, start: DataFrame, keys: list[str], max_hops: int
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Frontier BFS over a symmetric (s, d) edge frame from ``start``
+    (``keys`` + hop 0; the last key is the node the frontier stands on):
+    each hop joins the frontier to ``e.s``, keeps the distinct unvisited
+    keys by one anti join against the visited set, and barriers the new
+    layer; an empty layer stops the loop. Returns the visited set (keys,
+    hop) and the non-empty layers. Node-level BFS walks keys ``[node]``;
+    the exact neighborhood function walks ``[src, dst]`` pairs."""
+    *carried, node = keys
+    visited, frontier, layers = start, start.select(*keys), []
+    for h in range(1, max_hops + 1):
+        nxt = (
+            frontier.join(e, frontier[node] == e.s)
+            .select(*carried, F.col("d").alias(node))
+            .distinct()
+            .join(visited.select(*keys), keys, "left_anti")
+            .withColumn("hop", F.lit(h))
+            .transform(barrier_eager)
+        )
+        if nxt.isEmpty():
+            break
+        layers.append(nxt)
+        visited = visited.unionByName(nxt).transform(barrier_eager)
+        frontier = nxt.select(*keys)
+    return visited, layers
 
 
 def pagerank(
@@ -41,46 +191,12 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    w = (
-        F.lit(1.0)
-        if weight_col is None
-        else (F.col(weight_col) if isinstance(weight_col, str) else weight_col)
-    )
-    e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"), w.alias("_w")
-    )
-    # collapse parallel edges once and BARRIER the collapsed frame: norm
-    # and nodes both derive from it, so without this the (possibly
-    # expensive) raw edge derivation executes once per derived frame —
-    # the same agg_e barrier personalized_pagerank already takes
-    agg_e = e.groupBy("_src", "_dst").agg(F.sum("_w").alias("_w")).transform(
-        barrier_lazy
-    )
-    out_w = agg_e.groupBy("_src").agg(F.sum("_w").alias("_out_w"))
-    # norm and nodes are reused by EVERY iteration's join — without a
-    # checkpoint the final plan replays their derivation once per round
-    norm = agg_e.join(out_w, "_src").select(
-        "_src", "_dst", (F.col("_w") / F.col("_out_w")).alias("_share")
-    ).transform(barrier_lazy)
-    # agg_e preserves the distinct (src, dst) pairs of e, so the node set
-    # derived from it is identical to the one derived from raw e
-    nodes = (
-        agg_e.select(F.col("_src").alias("node"))
-        .unionByName(agg_e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .transform(barrier_lazy)
-    )
+    norm, nodes = _weighted_shares(edges, src_col, dst_col, weight_col)
     ranks = nodes.withColumn("rank", F.lit(1.0))
     base = F.lit(1.0 - damping)
     for _ in range(iterations):
-        contrib = norm.join(
-            ranks, norm._src == ranks.node
-        ).select("_dst", (F.col("rank") * F.col("_share")).alias("_c"))
-        incoming = contrib.groupBy(F.col("_dst").alias("node")).agg(
-            F.sum("_c").alias("_in")
-        )
         ranks = (
-            nodes.join(incoming, "node", "left")
+            nodes.join(_gather(norm, ranks), "node", "left")
             .select(
                 "node",
                 (base + damping * F.coalesce(F.col("_in"), F.lit(0.0))).alias(
@@ -127,27 +243,7 @@ def personalized_pagerank(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    w = (
-        F.lit(1.0)
-        if weight_col is None
-        else (F.col(weight_col) if isinstance(weight_col, str) else weight_col)
-    )
-    e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"), w.alias("_w")
-    )
-    agg_e = e.groupBy("_src", "_dst").agg(F.sum("_w").alias("_w")).transform(
-        barrier_lazy
-    )
-    out_w = agg_e.groupBy("_src").agg(F.sum("_w").alias("_out_w"))
-    norm = agg_e.join(out_w, "_src").select(
-        "_src", "_dst", (F.col("_w") / F.col("_out_w")).alias("_share")
-    ).transform(barrier_lazy)
-    nodes = (
-        agg_e.select(F.col("_src").alias("node"))
-        .unionByName(agg_e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .transform(barrier_lazy)
-    )
+    norm, nodes = _weighted_shares(edges, src_col, dst_col, weight_col)
     in_seeds = nodes.join(
         seeds.select(F.col(seeds.columns[0]).alias("node")).distinct(),
         "node",
@@ -161,17 +257,11 @@ def personalized_pagerank(
     )
     ranks = tele.select("node", F.col("tele").alias("rank"))
     for _ in range(iterations):
-        contrib = norm.join(
-            ranks, norm._src == ranks.node
-        ).select("_dst", (F.col("rank") * F.col("_share")).alias("_c"))
-        incoming = contrib.groupBy(F.col("_dst").alias("node")).agg(
-            F.sum("_c").alias("_in")
-        )
         # full-outer sparse merge: a node missing from `tele` has
-        # teleport exactly 0, one missing from `incoming` gathered
+        # teleport exactly 0, one missing from the gather received
         # exactly 0 — identical arithmetic to the dense left join
         ranks = (
-            tele.join(incoming, "node", "full_outer")
+            tele.join(_gather(norm, ranks), "node", "full_outer")
             .select(
                 "node",
                 (
@@ -221,12 +311,7 @@ def hits(
     e = edges.select(
         F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
     ).distinct().transform(barrier_lazy)
-    nodes = (
-        e.select(F.col("_src").alias("node"))
-        .unionByName(e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .transform(barrier_lazy)
-    )
+    nodes = _endpoints(e).transform(barrier_lazy)
     # dense start: every src is covered, so the first gather sees the
     # same hub=1.0 rows the dense form did
     hubs = nodes.withColumn("hub", F.lit(1.0))
@@ -290,27 +375,13 @@ def triangle_count(
     """
     e = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
     if max_degree is not None:
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionAll(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") <= max_degree)
-            .select("n")
-        )
+        keep = _degrees(e).filter(F.col("degree") <= max_degree).select("node")
         e = (
-            e.join(deg.withColumnRenamed("n", "a"), "a", "left_semi")
-            .join(deg.withColumnRenamed("n", "b"), "b", "left_semi")
+            e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
         )
-    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    wedges = e1.join(e2, "y")
-    closed = wedges.join(
-        e.select(F.col("a").alias("x"), F.col("b").alias("z")),
-        ["x", "z"],
-        "left_semi",
-    )
+    wedges, closed = _wedge_triangles(e)
     return (
         e.agg(F.count(F.lit(1)).alias("n_edges"))
         .crossJoin(wedges.agg(F.count(F.lit(1)).alias("n_wedges")))
@@ -338,19 +409,8 @@ def clustering_coefficients(
     in the edge list (cc = 0 when degree < 2).
     """
     e = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    triangles = e1.join(e2, "y").join(
-        e.select(F.col("a").alias("x"), F.col("b").alias("z")),
-        ["x", "z"],
-        "left_semi",
-    )
+    deg = _degrees(e)
+    _, triangles = _wedge_triangles(e)
     per_node = (
         triangles.select(
             F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("node")
@@ -397,17 +457,10 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    fwd = edges.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
-    # materialize the (possibly expensive) edge derivation ONCE — without
-    # this every round's plan re-runs the upstream edge generation (e.g.
-    # the co-purchase basket self-join), which dominated the measured cost
-    e = (
-        fwd.unionByName(
-            edges.select(F.col(b_col).alias("s"), F.col(a_col).alias("d"))
-        )
-        .distinct()
-        .transform(barrier_eager)
-    )
+    # materialized once: otherwise every round re-runs the upstream edge
+    # generation (e.g. the co-purchase basket self-join), which dominated
+    # the measured cost
+    e = _symmetric(edges, a_col, b_col)
     nodes = e.select(F.col("s").alias("node")).distinct().transform(barrier_eager)
     labels = nodes.withColumn("label", F.col("node"))
     for _ in range(rounds):
@@ -456,31 +509,14 @@ def bfs_hops(
     bounds the recursion for the oracle (a DuckDB recursive CTE with the
     same cap) and for pathological graphs.
     """
-    fwd = edges.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
-    e = fwd.unionByName(
-        edges.select(F.col(b_col).alias("s"), F.col(a_col).alias("d"))
-    ).distinct().transform(barrier_eager)
+    e = _symmetric(edges, a_col, b_col)
     dist = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("hop", F.lit(0))
         .transform(barrier_eager)
     )
-    frontier = dist.select("node")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier.node == e.s)
-            .select(F.col("d").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .transform(barrier_eager)
-        )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(nxt).transform(barrier_eager)
-        frontier = nxt.select("node")
-    return dist
+    return _bfs_layers(e, dist, ["node"], max_hops)[0]
 
 
 def sssp_weighted(
@@ -614,31 +650,10 @@ def kcore_peel(
     lineage flat. Returns ``(node, degree, converged)``, the induced
     degree after the final round.
     """
-    # canonicalize to (min, max) BEFORE distinct: a symmetric edge list
-    # carrying both orientations would otherwise double every degree
-    und = (
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(barrier_eager)
-    )
-    e = und
-
-    def degrees(ed: DataFrame) -> DataFrame:
-        return (
-            ed.select(F.col("a").alias("node"))
-            .unionAll(ed.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-
+    e = _canonical(edges, a_col, b_col).transform(barrier_eager)
     before = e
     for _ in range(rounds):
-        deg = degrees(e)
-        keep = deg.filter(F.col("degree") >= k).select("node")
+        keep = _degrees(e).filter(F.col("degree") >= k).select("node")
         before = e
         e = (
             e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
@@ -654,7 +669,7 @@ def kcore_peel(
     # output = the induced subgraph's degree table after the final peel
     # (nodes whose every edge vanished with dropped neighbors disappear
     # with it); no extra filter, so the oracle replays rounds verbatim
-    return degrees(e).select(
+    return _degrees(e).select(
         "node",
         "degree",
         F.lit(removed_last == 0).alias("converged"),
@@ -684,14 +699,7 @@ def link_prediction_scores(
 
     Returns (a, b, n_common, jaccard, adamic_adar) with a < b.
     """
-    und = (
-        edges.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _canonical(edges, a_col, b_col)
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
@@ -758,35 +766,19 @@ def neighborhood_function(
     O(nodes) state), which this exact operator is the ground-truth twin
     for.
     """
-    fwd = edges.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
-    e = (
-        fwd.unionByName(edges.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
-        .distinct()
-        .transform(barrier_eager)
-    )
+    e = _symmetric(edges, a_col, b_col)
     nodes = e.select(F.col("s").alias("node")).distinct()
     visited = nodes.select(
         F.col("node").alias("src"), F.col("node").alias("dst")
     ).withColumn("hop", F.lit(0)).transform(barrier_eager)
-    frontier = visited.select("src", "dst")
-    per_hop = []
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier.dst == e.s)
-            .select("src", F.col("d").alias("dst"))
-            .distinct()
-            .join(visited.select("src", "dst"), ["src", "dst"], "left_anti")
-            .withColumn("hop", F.lit(h))
-            .transform(barrier_eager)
+    _, layers = _bfs_layers(e, visited, ["src", "dst"], max_hops)
+    if not layers:
+        return edges.sparkSession.createDataFrame(
+            [], "hop int, n_pairs bigint, cum_pairs bigint, avg_reach double"
         )
-        if nxt.isEmpty():
-            break
-        per_hop.append(nxt.groupBy("hop").agg(F.count(F.lit(1)).alias("n_pairs")))
-        visited = visited.unionByName(nxt).transform(barrier_eager)
-        frontier = nxt.select("src", "dst")
-    spark = edges.sparkSession
-    if not per_hop:
-        return spark.createDataFrame([], "hop int, n_pairs bigint, cum_pairs bigint, avg_reach double")
+    per_hop = [
+        nxt.groupBy("hop").agg(F.count(F.lit(1)).alias("n_pairs")) for nxt in layers
+    ]
     counts = per_hop[0]
     for f in per_hop[1:]:
         counts = counts.unionByName(f)
@@ -824,12 +816,7 @@ def neighborhood_hll(
     deterministic (the sketch is a pure function of the hashed ids), and
     on small graphs the sketch's sparse mode makes them near-exact; the
     registry query value-checks them against the exact twin."""
-    fwd = edges.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
-    e = (
-        fwd.unionByName(edges.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
-        .distinct()
-        .transform(barrier_eager)
-    )
+    e = _symmetric(edges, a_col, b_col)
     nodes = e.select(F.col("s").alias("node")).distinct()
     n_nodes = nodes.count()
     state = (

@@ -214,7 +214,9 @@ def banded_grouped_ordinal(
         by_group.setdefault(_gkey(r), {})[int(r["__band"])] = int(r["__n"])
     off_items: list = []
     n_items: list = []
-    for gk, cells in by_group.items():
+    # sorted: the collect returns groups in no fixed order, and the map
+    # literals (so the plan text) must not depend on it
+    for gk, cells in sorted(by_group.items()):
         acc = 0
         for b in sorted(cells):
             off_items.append(F.lit(f"{gk}\x1f{b}"))

@@ -1,23 +1,44 @@
-"""Graph workload: weighted PageRank over the customer→supplier purchase
-graph (who buys from whom), the crawl-prioritization/source-scoring shape
-of a training-data pipeline. The oracle replays the SAME fixed 3-iteration
-recursion as unrolled DuckDB CTEs — every intermediate rank is the same
-IEEE arithmetic, so the final round-6 values match exactly.
+"""Graph workload: 13 queries over three graphs, each backed by an
+``operators/graph.py`` operator and checked by a DuckDB oracle that
+replays the same fixed-round recursion as unrolled or recursive CTEs.
+
+- The customer→supplier purchase graph (``_purchase_edges``; one directed
+  edge per lineitem, who buys from whom): ``pagerank_purchases``,
+  ``personalized_pagerank`` and ``hits_purchases`` — crawl-prioritization
+  and source-scoring shapes of a training-data pipeline.
+- The undirected co-purchase graph (``_copurchase_pairs``; parts ordered
+  together in >= 2 orders, a < b): ``triangle_count``,
+  ``clustering_coeffs``, ``label_propagation``, ``bfs_hops``,
+  ``weighted_sssp``, ``kcore_parts``, ``link_prediction``,
+  ``neighborhood_function`` and ``anf_hll``.
+- The adjacent-token co-occurrence graph of ``documents``:
+  ``textrank_keywords``.
+
+The oracles share the same graphs as SQL fragments
+(``SQL_PURCHASE_EDGES``, ``SQL_COPURCHASE_PAIRS``) and the PageRank
+normalization and rounds (``SQL_PAGERANK_NORM``, ``SQL_PAGERANK_ROUNDS``);
+each recursion step is the same IEEE arithmetic on both engines, so the
+rounded values match exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sentiment_analysis_bigdata_spark.workloads.text_q import SQL_TOKS
 from sentiment_analysis_bigdata_spark.operators.graph import (
+    bfs_hops,
     clustering_coefficients,
     hits,
     kcore_peel,
+    label_propagation,
     link_prediction_scores,
+    neighborhood_function,
+    neighborhood_hll,
     pagerank,
     personalized_pagerank,
+    sssp_weighted,
     triangle_count,
 )
 from sentiment_analysis_bigdata_spark.plans.barrier import barrier_lazy
@@ -27,56 +48,102 @@ PR_ITERATIONS = 3
 PR_DAMPING = 0.85
 
 
+def _purchase_edges(spark: SparkSession, sf: str) -> DataFrame:
+    """The purchase graph: one directed (src, dst) edge customer→supplier
+    per lineitem; parallel edges stay for the operators to collapse."""
+    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
+    return li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("src"),
+        F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
+    )
+
+
+def _copurchase_pairs(spark: SparkSession, sf: str, *extra: Column) -> DataFrame:
+    """The co-purchase graph: one (a, b) edge per part pair ordered together
+    in >= 2 orders, a < b, plus ``extra`` columns over the pair frame's
+    ``support``."""
+    from sentiment_analysis_bigdata_spark.operators import affinity
+
+    li = load_table(spark, sf, "lineitem")
+    return affinity.co_occurrence_pairs(
+        li, "l_orderkey", "l_partkey", min_support=2
+    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"), *extra)
+
+
+def _lowest_nodes(edges: DataFrame) -> DataFrame:
+    """The 3 smallest node ids of an (a, b) edge frame: the BFS/SSSP seeds."""
+    nodes = (
+        edges.select(F.col("a").alias("node"))
+        .unionByName(edges.select(F.col("b").alias("node")))
+        .distinct()
+    )
+    return nodes.orderBy("node").limit(3)
+
+
+# DuckDB twins of _purchase_edges (collapsed to weights, as the operators
+# do) and _copurchase_pairs
+SQL_PURCHASE_EDGES = """SELECT 'c:' || CAST(o_custkey AS VARCHAR) AS src,
+         's:' || CAST(l_suppkey AS VARCHAR) AS dst,
+         CAST(count(*) AS DOUBLE) AS w
+  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
+  GROUP BY 1, 2"""
+
+SQL_COPURCHASE_PAIRS = """SELECT a.item AS a, c.item AS b, count(*) AS support
+  FROM (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) a
+  JOIN (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) c
+    ON a.basket = c.basket
+  WHERE a.item < c.item
+  GROUP BY 1, 2 HAVING count(*) >= 2"""
+
+# the node set of a (src, dst) edge CTE `e`, and its weighted-share edges
+SQL_NODES = "nodes AS (SELECT DISTINCT src AS node FROM e UNION SELECT DISTINCT dst FROM e)"
+SQL_PAGERANK_NORM = f"""outw AS (SELECT src, sum(w) AS ow FROM e GROUP BY 1),
+norm AS (SELECT e.src, e.dst, e.w / outw.ow AS share FROM e JOIN outw ON outw.src = e.src),
+{SQL_NODES}"""
+
+
+def _sql_rounds(first: str, step: str) -> str:
+    """CTEs r0 … r{PR_ITERATIONS}: ``first`` defines r0, ``step`` (with a
+    ``{prev}`` placeholder) each later round from the one before."""
+    rounds = [
+        f"r{i} AS (\n" + step.format(prev=f"r{i - 1}") + "\n)"
+        for i in range(1, PR_ITERATIONS + 1)
+    ]
+    return f"r0 AS ({first}),\n" + ",".join(rounds)
+
+
+# the dense PageRank recursion over `norm` and `nodes`, final ranks in
+# r{PR_ITERATIONS}
+SQL_PAGERANK_ROUNDS = _sql_rounds(
+    "SELECT node, 1.0 AS rank FROM nodes",
+    f"""  SELECT n.node,
+         {1.0 - PR_DAMPING} + {PR_DAMPING} * coalesce(sum(p.rank * m.share), 0) AS rank
+  FROM nodes n
+  LEFT JOIN norm m ON m.dst = n.node
+  LEFT JOIN {{prev}} p ON p.node = m.src
+  GROUP BY n.node""",
+)
+
+
 def q_pagerank_purchases(spark: SparkSession, sf: str) -> DataFrame:
     """Rank customers and suppliers in the bipartite purchase graph: one
     directed edge customer→supplier per lineitem (parallel edges collapse
     to weights inside the operator)."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
-    )
     ranks = pagerank(
-        edges, iterations=PR_ITERATIONS, damping=PR_DAMPING
+        _purchase_edges(spark, sf), iterations=PR_ITERATIONS, damping=PR_DAMPING
     )
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def _sql_pagerank() -> str:
-    base = 1.0 - PR_DAMPING
-    prev = "r0"
-    iters = []
-    for i in range(1, PR_ITERATIONS + 1):
-        iters.append(
-            f"""r{i} AS (
-  SELECT n.node,
-         {base} + {PR_DAMPING} * coalesce(sum(p.rank * m.share), 0) AS rank
-  FROM nodes n
-  LEFT JOIN norm m ON m.dst = n.node
-  LEFT JOIN {prev} p ON p.node = m.src
-  GROUP BY n.node
-)"""
-        )
-        prev = f"r{i}"
-    return f"""
+SQL_PAGERANK_PURCHASES = f"""
 WITH e AS (
-  SELECT 'c:' || CAST(o_custkey AS VARCHAR) AS src,
-         's:' || CAST(l_suppkey AS VARCHAR) AS dst,
-         CAST(count(*) AS DOUBLE) AS w
-  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-  GROUP BY 1, 2
+  {SQL_PURCHASE_EDGES}
 ),
-outw AS (SELECT src, sum(w) AS ow FROM e GROUP BY 1),
-norm AS (SELECT e.src, e.dst, e.w / outw.ow AS share FROM e JOIN outw ON outw.src = e.src),
-nodes AS (SELECT DISTINCT src AS node FROM e UNION SELECT DISTINCT dst FROM e),
-r0 AS (SELECT node, 1.0 AS rank FROM nodes),
-{",".join(iters)}
-SELECT node, round(rank, 6) AS rank FROM {prev}
+{SQL_PAGERANK_NORM},
+{SQL_PAGERANK_ROUNDS}
+SELECT node, round(rank, 6) AS rank FROM r{PR_ITERATIONS}
 """
-
-
-SQL_PAGERANK_PURCHASES = _sql_pagerank()
 
 
 
@@ -87,22 +154,12 @@ def q_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     two equi joins and no permutation double-counting
     (operators/graph.py triangle_count). The oracle replays the identical
     census; edges/wedges/triangles are all value-checked."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-
-    li = load_table(spark, sf, "lineitem")
-    edges = affinity.co_occurrence_pairs(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    return triangle_count(edges)
+    return triangle_count(_copurchase_pairs(spark, sf))
 
 
-SQL_TRIANGLE_COUNT = """
-WITH b AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem),
-e AS (
-  SELECT a.item AS a, c.item AS b
-  FROM b a JOIN b c ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
+SQL_TRIANGLE_COUNT = f"""
+WITH e AS (
+  {SQL_COPURCHASE_PAIRS}
 )
 SELECT (SELECT count(*) FROM e) AS n_edges,
        (SELECT count(*) FROM e e1 JOIN e e2 ON e1.b = e2.a) AS n_wedges,
@@ -118,25 +175,15 @@ def q_clustering_coeffs(spark: SparkSession, sf: str) -> DataFrame:
     once (ordered wedges) and credits its three corners; cc = 2T/deg(deg-1),
     rounded for cross-engine float parity. Value-checks degree, per-node
     triangle count, AND the coefficient for every node."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-
-    li = load_table(spark, sf, "lineitem")
-    edges = affinity.co_occurrence_pairs(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    out = clustering_coefficients(edges)
+    out = clustering_coefficients(_copurchase_pairs(spark, sf))
     return out.select(
         "node", "degree", "n_triangles", F.round("clustering_coeff", 6).alias("cc")
     )
 
 
-SQL_CLUSTERING_COEFFS = """
-WITH b AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem),
-e AS (
-  SELECT a.item AS a, c.item AS b
-  FROM b a JOIN b c ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
+SQL_CLUSTERING_COEFFS = f"""
+WITH e AS (
+  {SQL_COPURCHASE_PAIRS}
 ),
 deg AS (
   SELECT node, count(*) AS degree FROM (
@@ -171,26 +218,12 @@ def q_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     vote (operators/graph.py label_propagation). Per-node community ids
     are value-checked; the oracle replays every round as unrolled
     MATERIALIZED CTEs."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-    from sentiment_analysis_bigdata_spark.operators.graph import label_propagation
-
-    li = load_table(spark, sf, "lineitem")
-    edges = affinity.co_occurrence_pairs(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    return label_propagation(edges, rounds=LPA_ROUNDS)
+    return label_propagation(_copurchase_pairs(spark, sf), rounds=LPA_ROUNDS)
 
 
 def _sql_label_propagation(rounds: int = LPA_ROUNDS) -> str:
     ctes = [
-        """pairs AS MATERIALIZED (
-  SELECT a.item AS a, c.item AS b
-  FROM (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) a
-  JOIN (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) c
-    ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)""",
+        f"pairs AS MATERIALIZED (\n  {SQL_COPURCHASE_PAIRS}\n)",
         """e AS MATERIALIZED (
   SELECT a AS s, b AS d FROM pairs UNION SELECT b, a FROM pairs
 )""",
@@ -239,44 +272,31 @@ def q_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
     (operators/graph.py bfs_hops — frontier-proportional work per round).
     The oracle replays the capped recursion as a recursive CTE taking
     min(depth) per node."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-    from sentiment_analysis_bigdata_spark.operators.graph import bfs_hops
-
-    li = load_table(spark, sf, "lineitem")
     # barrier the basket self-join ONCE: `edges` feeds both the operator
     # (which checkpoints its own symmetrized copy) and the nodes→seeds
     # derivation — without this the co-occurrence join executes twice
     # (r12; the pair frame is support-capped, so the checkpoint is small)
-    edges = (
-        affinity.co_occurrence_pairs(li, "l_orderkey", "l_partkey", min_support=2)
-        .select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-        .transform(barrier_lazy)
-    )
-    nodes = (
-        edges.select(F.col("a").alias("node"))
-        .unionByName(edges.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    seeds = nodes.orderBy("node").limit(3)
-    return bfs_hops(edges, seeds, max_hops=BFS_MAX_HOPS)
+    edges = _copurchase_pairs(spark, sf).transform(barrier_lazy)
+    return bfs_hops(edges, _lowest_nodes(edges), max_hops=BFS_MAX_HOPS)
 
 
+# the symmetric co-purchase edges (s, d) and their node set, over `pairs`
+SQL_SYMMETRIC_PAIRS = """e AS (SELECT a AS s, b AS d FROM pairs UNION SELECT b, a FROM pairs),
+n AS (SELECT DISTINCT s AS node FROM e)"""
+
+# the walks UNION (not UNION ALL) their (node, hop) states: equal states
+# extend identically, and on a dense graph the number of distinct walks
+# of <= 6 hops outgrows any disk
 SQL_BFS_HOPS = f"""
 WITH RECURSIVE
 pairs AS (
-  SELECT a.item AS a, c.item AS b
-  FROM (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) a
-  JOIN (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) c
-    ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
+  {SQL_COPURCHASE_PAIRS}
 ),
-e AS (SELECT a AS s, b AS d FROM pairs UNION SELECT b, a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
+{SQL_SYMMETRIC_PAIRS},
 seeds AS (SELECT node FROM n ORDER BY node LIMIT 3),
 walk(node, hop) AS (
   SELECT node, 0 FROM seeds
-  UNION ALL
+  UNION
   SELECT e.d, walk.hop + 1
   FROM walk JOIN e ON e.s = walk.node
   WHERE walk.hop < {BFS_MAX_HOPS}
@@ -345,23 +365,7 @@ def q_textrank_keywords(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sql_textrank() -> str:
-    base = 1.0 - PR_DAMPING
-    prev = "r0"
-    iters = []
-    for i in range(1, PR_ITERATIONS + 1):
-        iters.append(
-            f"""r{i} AS (
-  SELECT n.node,
-         {base} + {PR_DAMPING} * coalesce(sum(p.rank * m.share), 0) AS rank
-  FROM nodes n
-  LEFT JOIN norm m ON m.dst = n.node
-  LEFT JOIN {prev} p ON p.node = m.src
-  GROUP BY n.node
-)"""
-        )
-        prev = f"r{i}"
-    return f"""
+SQL_TEXTRANK_KEYWORDS = f"""
 WITH toks AS (SELECT {SQL_TOKS} AS l FROM documents),
 bi AS (
   SELECT l[CAST(i AS INT)] AS a, l[CAST(i AS INT) + 1] AS b
@@ -373,20 +377,14 @@ e AS (
   FROM (SELECT a, b FROM bi UNION ALL SELECT b AS a, a AS b FROM bi)
   GROUP BY 1, 2
 ),
-outw AS (SELECT src, sum(w) AS ow FROM e GROUP BY 1),
-norm AS (SELECT e.src, e.dst, e.w / outw.ow AS share FROM e JOIN outw ON outw.src = e.src),
-nodes AS (SELECT DISTINCT src AS node FROM e UNION SELECT DISTINCT dst FROM e),
-r0 AS (SELECT node, 1.0 AS rank FROM nodes),
-{",".join(iters)}
+{SQL_PAGERANK_NORM},
+{SQL_PAGERANK_ROUNDS}
 SELECT keyword, rank, CAST(pos AS INT) AS pos FROM (
   SELECT node AS keyword, round(rank, 6) AS rank,
          row_number() OVER (ORDER BY round(rank, 6) DESC, node) AS pos
-  FROM {prev})
+  FROM r{PR_ITERATIONS})
 WHERE pos <= 10
 """
-
-
-SQL_TEXTRANK_KEYWORDS = _sql_textrank()
 
 
 _KCORE_K = 4
@@ -400,13 +398,9 @@ def q_kcore_parts(spark: SparkSession, sf: str) -> DataFrame:
     the same peel isolates mutual near-duplicate cliques). The fixed
     round budget is what makes the recursion oracle-replayable — the
     oracle unrolls the identical 3 rounds as CTEs."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-
-    li = load_table(spark, sf, "lineitem")
-    edges = affinity.co_occurrence_pairs(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    return kcore_peel(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS).orderBy("node")
+    return kcore_peel(
+        _copurchase_pairs(spark, sf), k=_KCORE_K, rounds=_KCORE_ROUNDS
+    ).orderBy("node")
 
 
 def _sql_kcore() -> str:
@@ -427,11 +421,8 @@ e{r} AS MATERIALIZED (
 )""")
         prev = f"e{r}"
     return f"""
-WITH b AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem),
-pairs AS (
-  SELECT x.item AS a, y.item AS b
-  FROM b x JOIN b y ON x.basket = y.basket AND x.item < y.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
+WITH pairs AS (
+  {SQL_COPURCHASE_PAIRS}
 ),
 e0 AS MATERIALIZED (SELECT a, b FROM pairs),
 {",".join(rounds)},
@@ -463,13 +454,7 @@ def q_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     knn-graph densification step. Candidates come from the wedge join only
     (never all-pairs); the oracle replays wedge generation, the NOT-EXISTS
     edge filter, and all three scores value-exactly."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-
-    li = load_table(spark, sf, "lineitem")
-    edges = affinity.co_occurrence_pairs(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    out = link_prediction_scores(edges, min_common=2)
+    out = link_prediction_scores(_copurchase_pairs(spark, sf), min_common=2)
     return out.select(
         "a",
         "b",
@@ -479,13 +464,9 @@ def q_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_LINK_PREDICTION = """
-WITH b AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem),
-e AS (
-  SELECT a.item AS a, c.item AS b
-  FROM b a JOIN b c ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
+SQL_LINK_PREDICTION = f"""
+WITH e AS (
+  {SQL_COPURCHASE_PAIRS}
 ),
 adj AS (SELECT a AS node, b AS nbr FROM e UNION ALL SELECT b, a FROM e),
 deg AS (SELECT node, count(*) AS degree FROM adj GROUP BY 1),
@@ -514,47 +495,29 @@ JOIN deg dz ON dz.node = c.z
 def q_weighted_sssp(spark: SparkSession, sf: str) -> DataFrame:
     """Weighted shortest paths over the co-purchase graph
     (operators/graph.py sssp_weighted — bounded Bellman-Ford,
-    delta-relaxation frontier): edge weight = max(1, 6 − support), so
+    relaxations in unrolled pairs): edge weight = max(1, 6 − support), so
     frequently co-purchased pairs are 'close' and a chain of strong ties
     can beat one weak direct edge — the weighted complement of
     ``bfs_hops`` on the same graph and seed set. Integer weights keep
     min() exact across engines; the oracle replays the ≤6-edge
     relaxation closure as a recursive CTE."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-    from sentiment_analysis_bigdata_spark.operators.graph import sssp_weighted
-
-    li = load_table(spark, sf, "lineitem")
     # barrier the basket self-join ONCE (same reason as q_bfs_hops): the
     # edge frame feeds the operator AND the nodes→seeds derivation, and
     # the co-occurrence join alone measures ~2.2 s warm at sf0.1 — it
     # used to execute twice per run (r12)
-    edges = (
-        affinity.co_occurrence_pairs(li, "l_orderkey", "l_partkey", min_support=2)
-        .select(
-            F.col("item_a").alias("a"),
-            F.col("item_b").alias("b"),
-            F.greatest(F.lit(1), F.lit(6) - F.col("support").cast("int")).alias("w"),
-        )
-        .transform(barrier_lazy)
-    )
-    nodes = (
-        edges.select(F.col("a").alias("node"))
-        .unionByName(edges.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    seeds = nodes.orderBy("node").limit(3)
-    return sssp_weighted(edges, seeds, rounds=BFS_MAX_HOPS)
+    edges = _copurchase_pairs(
+        spark,
+        sf,
+        F.greatest(F.lit(1), F.lit(6) - F.col("support").cast("int")).alias("w"),
+    ).transform(barrier_lazy)
+    return sssp_weighted(edges, _lowest_nodes(edges), rounds=BFS_MAX_HOPS)
 
 
+# walks UNION their (node, dist, steps) states, as in SQL_BFS_HOPS
 SQL_WEIGHTED_SSSP = f"""
 WITH RECURSIVE
 pairs AS (
-  SELECT a.item AS a, c.item AS b, count(*) AS support
-  FROM (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) a
-  JOIN (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) c
-    ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
+  {SQL_COPURCHASE_PAIRS}
 ),
 we AS (
   SELECT a AS s, b AS d, GREATEST(1, 6 - CAST(support AS INTEGER)) AS w FROM pairs
@@ -566,7 +529,7 @@ n AS (SELECT DISTINCT s AS node FROM e),
 seeds AS (SELECT node FROM n ORDER BY node LIMIT 3),
 walk(node, dist, steps) AS (
   SELECT node, 0, 0 FROM seeds
-  UNION ALL
+  UNION
   SELECT e.d, walk.dist + e.w, walk.steps + 1
   FROM walk JOIN e ON e.s = walk.node
   WHERE walk.steps < {BFS_MAX_HOPS}
@@ -587,12 +550,7 @@ def q_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     the oracle replays teleport construction and all three unrolled
     iterations, so the diffusion VALUES are checked, not just the
     reachable set."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
-    )
+    edges = _purchase_edges(spark, sf)
     seeds = spark.createDataFrame([(s,) for s in _PPR_SEEDS], "node string")
     ranks = personalized_pagerank(
         edges, seeds, iterations=PR_ITERATIONS, damping=PR_DAMPING
@@ -603,34 +561,22 @@ def q_personalized_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_personalized_pagerank() -> str:
-    base = 1.0 - PR_DAMPING
     seed_list = ", ".join(f"'{s}'" for s in _PPR_SEEDS)
-    prev = "r0"
-    iters = []
-    for i in range(1, PR_ITERATIONS + 1):
-        iters.append(
-            f"""r{i} AS (
-  SELECT t.node,
-         {base} * t.tele
+    rounds = _sql_rounds(
+        "SELECT node, tele AS rank FROM tele",
+        f"""  SELECT t.node,
+         {1.0 - PR_DAMPING} * t.tele
            + {PR_DAMPING} * coalesce(sum(p.rank * m.share), 0) AS rank
   FROM tele t
   LEFT JOIN norm m ON m.dst = t.node
-  LEFT JOIN {prev} p ON p.node = m.src
-  GROUP BY t.node, t.tele
-)"""
-        )
-        prev = f"r{i}"
+  LEFT JOIN {{prev}} p ON p.node = m.src
+  GROUP BY t.node, t.tele""",
+    )
     return f"""
 WITH e AS (
-  SELECT 'c:' || CAST(o_custkey AS VARCHAR) AS src,
-         's:' || CAST(l_suppkey AS VARCHAR) AS dst,
-         CAST(count(*) AS DOUBLE) AS w
-  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-  GROUP BY 1, 2
+  {SQL_PURCHASE_EDGES}
 ),
-outw AS (SELECT src, sum(w) AS ow FROM e GROUP BY 1),
-norm AS (SELECT e.src, e.dst, e.w / outw.ow AS share FROM e JOIN outw ON outw.src = e.src),
-nodes AS (SELECT DISTINCT src AS node FROM e UNION SELECT DISTINCT dst FROM e),
+{SQL_PAGERANK_NORM},
 in_seeds AS (SELECT node FROM nodes WHERE node IN ({seed_list})),
 ns AS (SELECT count(*) AS n FROM in_seeds),
 tele AS (
@@ -638,9 +584,8 @@ tele AS (
          CASE WHEN s.node IS NOT NULL THEN 1.0 / ns.n ELSE 0.0 END AS tele
   FROM nodes LEFT JOIN in_seeds s ON s.node = nodes.node CROSS JOIN ns
 ),
-r0 AS (SELECT node, tele AS rank FROM tele),
-{",".join(iters)}
-SELECT node, round(rank, 6) AS rank FROM {prev} WHERE rank > 0
+{rounds}
+SELECT node, round(rank, 6) AS rank FROM r{PR_ITERATIONS} WHERE rank > 0
 """
 
 
@@ -655,13 +600,7 @@ def q_hits_purchases(spark: SparkSession, sf: str) -> DataFrame:
     the same edges. The oracle unrolls all three alternating half-steps
     and the final max-normalization, so the reinforcement VALUES are
     checked, not just rankings."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
-    )
-    out = hits(edges, iterations=PR_ITERATIONS)
+    out = hits(_purchase_edges(spark, sf), iterations=PR_ITERATIONS)
     return out.select(
         "node",
         F.round("hub", 6).alias("hub"),
@@ -696,11 +635,9 @@ def _sql_hits() -> str:
         last_a = f"a{i}"
     return f"""
 WITH e AS (
-  SELECT DISTINCT 'c:' || CAST(o_custkey AS VARCHAR) AS src,
-         's:' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
+  {SQL_PURCHASE_EDGES}
 ),
-nodes AS (SELECT DISTINCT src AS node FROM e UNION SELECT DISTINCT dst FROM e),
+{SQL_NODES},
 h0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS hub FROM nodes),
 {",".join(steps)},
 mx AS (SELECT max(hub) AS mh FROM {prev_h}),
@@ -730,28 +667,17 @@ def q_neighborhood_function(spark: SparkSession, sf: str) -> DataFrame:
     choosing a dedup-component or crawl propagation depth; the oracle
     replays the capped expansion as a recursive CTE and takes min(hop)
     per pair."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-    from sentiment_analysis_bigdata_spark.operators.graph import neighborhood_function
-
-    li = load_table(spark, sf, "lineitem")
-    edges = affinity.co_occurrence_pairs(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-    return neighborhood_function(edges, max_hops=ANF_MAX_HOPS)
+    return neighborhood_function(_copurchase_pairs(spark, sf), max_hops=ANF_MAX_HOPS)
 
 
-SQL_NEIGHBORHOOD_FUNCTION = f"""
+# c(hop, n_pairs): ordered co-purchase pairs at exactly `hop` (>= 1), and
+# the node set n
+SQL_PAIRS_PER_HOP = f"""
 WITH RECURSIVE
 pairs AS (
-  SELECT a.item AS a, c.item AS b
-  FROM (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) a
-  JOIN (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) c
-    ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
+  {SQL_COPURCHASE_PAIRS}
 ),
-e AS (SELECT a AS s, b AS d FROM pairs UNION SELECT b, a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
+{SQL_SYMMETRIC_PAIRS},
 walk(src, node, hop) AS (
   SELECT node, node, 0 FROM n
   UNION
@@ -760,7 +686,9 @@ walk(src, node, hop) AS (
   WHERE walk.hop < {ANF_MAX_HOPS}
 ),
 m AS (SELECT src, node, min(hop) AS hop FROM walk GROUP BY 1, 2),
-c AS (SELECT CAST(hop AS INTEGER) AS hop, count(*) AS n_pairs FROM m WHERE hop >= 1 GROUP BY 1)
+c AS (SELECT CAST(hop AS INTEGER) AS hop, count(*) AS n_pairs FROM m WHERE hop >= 1 GROUP BY 1)"""
+
+SQL_NEIGHBORHOOD_FUNCTION = f"""{SQL_PAIRS_PER_HOP}
 SELECT hop, n_pairs,
        CAST(sum(n_pairs) OVER (ORDER BY hop) AS BIGINT) AS cum_pairs,
        round(sum(n_pairs) OVER (ORDER BY hop)
@@ -777,16 +705,7 @@ def q_anf_hll(spark: SparkSession, sf: str) -> DataFrame:
     within 10% of it, so a broken sketch union turns the row red. The
     sketch path is the one that runs at 100 TB (nodes-sized state); the
     exact path is its certification."""
-    from sentiment_analysis_bigdata_spark.operators import affinity
-    from sentiment_analysis_bigdata_spark.operators.graph import (
-        neighborhood_function,
-        neighborhood_hll,
-    )
-
-    li = load_table(spark, sf, "lineitem")
-    edges = affinity.co_occurrence_pairs(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
+    edges = _copurchase_pairs(spark, sf)
     exact = neighborhood_function(edges, max_hops=ANF_MAX_HOPS).select(
         "hop", "cum_pairs"
     )
@@ -805,27 +724,7 @@ def q_anf_hll(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_ANF_HLL = f"""
-WITH RECURSIVE
-pairs AS (
-  SELECT a.item AS a, c.item AS b
-  FROM (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) a
-  JOIN (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item FROM lineitem) c
-    ON a.basket = c.basket
-  WHERE a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
-),
-e AS (SELECT a AS s, b AS d FROM pairs UNION SELECT b, a FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
-walk(src, node, hop) AS (
-  SELECT node, node, 0 FROM n
-  UNION
-  SELECT walk.src, e.d, walk.hop + 1
-  FROM walk JOIN e ON e.s = walk.node
-  WHERE walk.hop < {ANF_MAX_HOPS}
-),
-m AS (SELECT src, node, min(hop) AS hop FROM walk GROUP BY 1, 2),
-c AS (SELECT CAST(hop AS INTEGER) AS hop, count(*) AS n_pairs FROM m WHERE hop >= 1 GROUP BY 1)
+SQL_ANF_HLL = f"""{SQL_PAIRS_PER_HOP}
 SELECT hop, CAST(sum(n_pairs) OVER (ORDER BY hop) AS BIGINT) AS cum_pairs,
        TRUE AS est_within_10pct
 FROM c ORDER BY hop

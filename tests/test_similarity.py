@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from sentiment_analysis_bigdata_spark.functions import vector as V
 from sentiment_analysis_bigdata_spark.operators import pca
 from sentiment_analysis_bigdata_spark.operators import similarity as SIM
+from sentiment_analysis_bigdata_spark.plans import explain
 
 DIM = 16
 N = 60
@@ -179,9 +180,7 @@ class TestPersistedIvfIndex:
         idx = str(tmp_path / "ivf2")
         SIM.build_ivf_index(corpus, idx, nlist=4)
         df = SIM.ivf_index_topk(spark, idx, queries, k=5, nprobe=1)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain.formatted_plan(df)
         # the probe-list IN filter must land in PartitionFilters (pruned at
         # file-listing time), never as a row-level data filter
         assert "PartitionFilters" in plan

@@ -1155,6 +1155,7 @@ def single_partition_violations(plan: str) -> list[str]:
 def main() -> None:
     import __spark_entry__ as entrymod
     from sentiment_analysis_bigdata_spark import get_spark
+    from sentiment_analysis_bigdata_spark.plans import explain
 
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1175,10 +1176,7 @@ def main() -> None:
     plans = {}
 
     def _plan_of(name):
-        df = qs[name](spark, SF)
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        return explain.formatted_plan(qs[name](spark, SF))
 
     for name, (markers, why) in AUDIT.items():
         plan = plans.setdefault(name, _plan_of(name))
